@@ -361,6 +361,8 @@ def _xxhash_sigs_cand(
     sigs = session_cache_hit(_XXHASH_SIG_CACHE, key)
     cand = session_cache_hit(_XXHASH_CAND_CACHE, key)
     if sigs is not None and cand is not None:
+        # refresh the shingle pin too, so its LRU order tracks sigs/cand
+        session_cache_hit(_XXHASH_SH_CACHE, key)
         return sigs, cand
     prune_stale_session_entries(_XXHASH_SIG_CACHE, key, lambda e: e)
     prune_stale_session_entries(_XXHASH_CAND_CACHE, key, lambda e: e)

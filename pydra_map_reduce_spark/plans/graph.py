@@ -567,6 +567,11 @@ def link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sf0.1).
 _LP_CAP = 16
 _LP_SUP = 2
+# Largest |V| whose (node, degree) frame is broadcast. Its hash
+# relation takes about 56 bytes a node (24-byte row, link, key slot),
+# so 500 k nodes build about 28 MB, under session.py's 32 MB broadcast
+# threshold. Above it both sides of that join sort-merge.
+_LP_BCAST_NODES = 500_000
 
 
 @query(
@@ -707,11 +712,18 @@ def link_prediction_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exploding the pinned adjacency replaces the old
         # nbr ⋈ deg(z) join outright (guide §2.1: one less
         # corpus-sized shuffle); only the NEIGHBOR's degree still
-        # needs a join (node-sized frame, AQE picks broadcast at
-        # fixture scale and sort-merge when deg outgrows the
-        # threshold).
+        # needs a join. Its build side is chosen from the node count,
+        # not left to the planner: Spark's size estimate for explode
+        # does not grow with the arrays, so AQE could build the hash
+        # relation from the Σdeg-row exploded side instead (2.39 M
+        # rows, a 128 MB broadcast at sf0.1, which a 1 GB heap
+        # fragmented by long-lived humongous arrays failed to place:
+        # notEnoughMemoryToBuildAndBroadcastTable in bench.py).
         dxn = adj.select(
             F.col("node").alias("x_n"), F.size("ns").alias("dx")
+        )
+        dxn = (
+            F.broadcast(dxn) if n_nodes <= _LP_BCAST_NODES else dxn.hint("merge")
         )
         ornt = (
             adj.select(

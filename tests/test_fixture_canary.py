@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from pydra_map_reduce_spark.sources.tables import (
@@ -43,6 +45,18 @@ def test_fixture_loads_with_public_schema(spark, sf_dir, table):
         f"fixture drift for {table} at {sf_dir}: loader produced {got}, "
         f"public schema is {want}"
     )
+
+
+def test_retyped_column_fails_fast_naming_table(spark, tmp_path):
+    """The drift check's failure path: a footer whose column type
+    differs from the declared schema raises at load time, naming the
+    table, instead of reading the column under the declared type."""
+    region = pa.table(
+        {"r_regionkey": pa.array(["0", "1"]), "r_name": pa.array(["AFRICA", "ASIA"])}
+    )
+    pq.write_table(region, tmp_path / "region.parquet")
+    with pytest.raises(ValueError, match="schema drift for table 'region'"):
+        load_table(spark, str(tmp_path), "region")
 
 
 @pytest.mark.parametrize("sf_dir", _SF_DIRS, ids=os.path.basename)

@@ -11,6 +11,8 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
+
 from pydra_map_reduce_spark.plans import REGISTRY
 
 from .conftest import SF_DIR
@@ -34,18 +36,68 @@ def _formatted(df) -> str:
 
 
 def _final_plan(plan: str) -> str:
-    """The plan text up to the first '== Initial Plan ==' marker.
+    """The plan tree without its '== Initial Plan ==' sections.
 
     A query served from a session cache embeds the cached relation's
     ALREADY-EXECUTED AdaptiveSparkPlan, which renders its subtree twice
-    (once under '== Final Plan ==', once under '== Initial Plan ==') —
+    (under '== Final Plan ==' AND '== Initial Plan ==', one FileScan each),
     so a raw substring count over the full string double-counts every
     node of the cached build (the r14 driver verify caught
     test_gopher_rules failing exactly this way once the suite had
-    warmed the flags cache). Counting up to the first Initial-Plan
-    marker sees each operator of the effective plan exactly once, in
-    cold, cache-miss and cache-hit states alike."""
-    return plan.split("== Initial Plan ==", 1)[0]
+    warmed the flags cache). A nested cached plan's marker drops only
+    its own section, up to the next line that is not nested deeper; the
+    top-level marker (column 0) or the end of the tree (the blank line
+    before ``explain("formatted")``'s node details) ends the text.
+    Cutting at the FIRST marker instead ended the text inside a nested
+    cached plan whenever the top level was not yet executed, so every
+    operator rendered after it went uncounted and a '== 1' count could
+    pass vacuously."""
+    out, cut_depth = [], None
+    for line in plan.splitlines():
+        if not line.strip() or line.startswith("+- == Initial Plan =="):
+            break
+        node = line.lstrip(" :|")
+        depth = len(line) - len(node)
+        if cut_depth is not None and depth > cut_depth:
+            continue
+        cut_depth = depth if node.startswith("+- == Initial Plan ==") else None
+        if cut_depth is None:
+            out.append(line)
+    return "\n".join(out)
+
+
+def test_final_plan_on_captured_formatted_plan():
+    """A formatted plan captured from Spark (a query over a cached
+    relation whose AQE build has run): the nested initial plan and the
+    node-detail section after the tree are not counted."""
+    with open(_os.path.join(_os.path.dirname(__file__), "..", "plans", "r14",
+                            "linear_quality_score_after.txt")) as f:
+        plan = f.read()
+    final = _final_plan(plan)
+    assert final.count("Scan parquet") == 1, final
+    assert "Initial Plan" not in final and "(3) Scan parquet" not in final, final
+
+
+def test_final_plan_keeps_operators_after_a_nested_cached_plan(spark):
+    """A live plan joining a cached, already-built relation to a second
+    scan: the second scan renders AFTER the cached plan's initial
+    section and is counted, before and after the top level runs."""
+    cached = spark.read.parquet(f"{SF_DIR}/nation.parquet").groupBy(
+        "n_regionkey"
+    ).count().cache()
+    try:
+        cached.count()
+        region = spark.read.parquet(f"{SF_DIR}/region.parquet")
+        df = cached.join(region, cached.n_regionkey == region.r_regionkey)
+        before = _executed(df)
+        assert before.count("Initial Plan") == 1, before
+        assert _final_plan(before).count("FileScan parquet") == 2, before
+        df.collect()
+        after = _executed(df)
+        assert after.startswith("AdaptiveSparkPlan isFinalPlan=true"), after
+        assert _final_plan(after).count("FileScan parquet") == 2, after
+    finally:
+        cached.unpersist()
 
 
 def test_dim_joins_broadcast(spark):
@@ -796,6 +848,58 @@ def test_ivf_serve_reuses_trained_index(spark):
     b = [tuple(r) for r in REGISTRY["ivf_ann_serve"].fn(spark, SF_DIR).collect()]
     assert a == b and len(a) == 5
     assert len(V._IVF_SERVE_CACHE) == n_before
+
+
+def test_xxhash_cache_hit_refreshes_shingle_pin(spark, monkeypatch):
+    """A sigs/cand hit moves the shingle frame's entry to the LRU tail
+    with them, so the three dicts evict the same entry first."""
+    from pydra_map_reduce_spark.plans import dedup as D
+
+    from pydra_map_reduce_spark.sources.tables import _fixture_key
+
+    key = (
+        spark.sparkContext.applicationId,
+        SF_DIR,
+        _fixture_key(f"{SF_DIR}/documents.parquet"),
+    )
+    other = (spark.sparkContext.applicationId, "/elsewhere", None)
+    for name in ("_XXHASH_SH_CACHE", "_XXHASH_SIG_CACHE", "_XXHASH_CAND_CACHE"):
+        monkeypatch.setattr(D, name, {key: name, other: name})
+    sigs, cand = D._xxhash_sigs_cand(spark, SF_DIR)
+    assert (sigs, cand) == ("_XXHASH_SIG_CACHE", "_XXHASH_CAND_CACHE")
+    for cache in (D._XXHASH_SH_CACHE, D._XXHASH_SIG_CACHE, D._XXHASH_CAND_CACHE):
+        assert list(cache) == [other, key]
+
+
+@pytest.mark.parametrize("over_limit", [False, True], ids=["broadcast", "merge"])
+def test_link_prediction_broadcasts_node_degrees(spark, monkeypatch, over_limit):
+    """The degree join builds its hash relation from the |V|-row
+    (node, degree) frame, never from the Σdeg-row exploded adjacency,
+    whose size Spark's explode estimate does not scale (at sf0.1 that
+    side is a 128 MB broadcast of 2.39 M rows). Above the node limit
+    both sides sort-merge."""
+    import re
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from pydra_map_reduce_spark.plans import graph as G
+
+    if over_limit:
+        monkeypatch.setattr(G, "_LP_BCAST_NODES", 0)
+    plans = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def spy(self, eager=True):
+        out = checkpoint(self, eager)
+        plans.append(_executed(self))
+        return out
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    REGISTRY["link_prediction_capped"].fn(spark, SF_DIR)
+    plan = _final_plan(plans[-1])
+    joins = re.findall(r"(\w+Join) \[(\w+)#\d+L\], \[x_n#\d+L\], Inner(, Build\w+)?", plan)
+    want = ("SortMergeJoin", "x", "") if over_limit else ("BroadcastHashJoin", "x", ", BuildRight")
+    assert joins == [want], plan
 
 
 def test_semantic_dedup_equi_joins_only(spark):

@@ -11,6 +11,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session_cache import release
+
 # MinHash family h_i(x) = (a_i*x + b_i) mod p over 32-bit shingle ids.
 _P = 4_294_967_311  # smallest prime > 2^32
 _A = [2 * i + 1 for i in range(1, 129)]
@@ -781,6 +783,7 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
                 .limit(1)
                 .count()
             )
+            release(labels)  # superseded by its own eager checkpoint
             labels = updated
             if changed == 0:
                 break

@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session_cache import release
 from .textops import (
     round_half_up,
     signed_round_half_up,
@@ -651,19 +652,22 @@ def ivf_train_distributed(
             .agg(F.min(F.struct("d2", "cid")).getField("cid").alias("cid"))
         )
 
-    for _ in range(lloyd_iters):
+    for r in range(lloyd_iters):
         # update joins the narrow assignment back to the flat corpus on
         # vec_id — one keyed exchange per round whose bytes equal the
         # corpus vectors crossing once (the same traffic the wide-agg
         # form paid inside its shuffle), then a dim-wide avg straight
         # to the next flat centroid frame
-        cents = (
+        updated = (
             assign(cents)
             .join(flat, "vec_id")
             .groupBy("cid")
             .agg(*[F.expr(f"avg(v{i})").alias(f"m{i}") for i in range(dim)])
             .localCheckpoint(eager=True)
         )
+        if r:  # free the superseded round; round 0 read the seeds
+            release(cents)
+        cents = updated
     assigned = assign(cents)
     if materialize:
         # cut ALL training lineage: the inverted lists become

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as ops
 from ..operators.textops import round_half_up, signed_round_half_up
+from ..session_cache import session_cached
 from ..sources.tables import load_table
 from .registry import query
 
@@ -318,27 +319,20 @@ def minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_portable_pairs(spark, sf_dir)
 
 
-# Session-cached (signatures, band-candidates) for the xxhash64
-# PRODUCTION pipeline (32 hashes / 8 bands, threshold-independent) —
-# the exact _portable_sigs_cand pattern on the other shingle identity.
-# Built on plans IDENTICAL to minhash_lsh_pairs' internal subtrees, so
-# CacheManager substitutes the persisted frames into the operator's
-# pipeline without touching the operator. Two dicts for the same
-# one-frame-per-entry prune reason as the portable caches.
-_XXHASH_SIG_CACHE: dict = {}
-_XXHASH_CAND_CACHE: dict = {}
-# The shingle frame the sigs/cand build persists must be tracked in its
-# own keyed dict (the _PORTABLE_SH_CACHE pattern): untracked, a fixture
-# regeneration left the stale persisted sh pinned forever AND let
-# CacheManager plan-dedup substitute it under the freshly keyed
-# sigs/cand rebuild, poisoning the _fixture_key invalidation
-# (r14 ADVICE, medium).
-_XXHASH_SH_CACHE: dict = {}
-
-
+# Session-cached (shingles, signatures, band-candidates) for the
+# xxhash64 PRODUCTION pipeline (32 hashes / 8 bands,
+# threshold-independent) — the _portable_sigs_cand pattern on the other
+# shingle identity. Built on plans IDENTICAL to minhash_lsh_pairs'
+# internal subtrees, so CacheManager substitutes the persisted frames
+# into the operator's pipeline without touching the operator. The
+# shingle frame is part of the entry: untracked, a fixture regeneration
+# left the stale persisted sh pinned forever AND let CacheManager
+# substitute it under the freshly keyed sigs/cand rebuild (r14 ADVICE,
+# medium).
+@session_cached("documents")
 def _xxhash_sigs_cand(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     from pyspark.storagelevel import StorageLevel
 
     from ..operators.dedup import (
@@ -347,26 +341,7 @@ def _xxhash_sigs_cand(
         minhash_signatures,
         shingle_rows,
     )
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
-    )
-    sigs = session_cache_hit(_XXHASH_SIG_CACHE, key)
-    cand = session_cache_hit(_XXHASH_CAND_CACHE, key)
-    if sigs is not None and cand is not None:
-        # refresh the shingle pin too, so its LRU order tracks sigs/cand
-        session_cache_hit(_XXHASH_SH_CACHE, key)
-        return sigs, cand
-    prune_stale_session_entries(_XXHASH_SIG_CACHE, key, lambda e: e)
-    prune_stale_session_entries(_XXHASH_CAND_CACHE, key, lambda e: e)
-    prune_stale_session_entries(_XXHASH_SH_CACHE, key, lambda e: e)
     d = load_table(spark, sf_dir, "documents")
     # EXACT plan twin of minhash_lsh_pairs' internal sh_rows (same
     # _spread, same defaults) — the .persist here and the operator's
@@ -374,14 +349,11 @@ def _xxhash_sigs_cand(
     sh = shingle_rows(_spread(d), "doc_id", "text").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    _XXHASH_SH_CACHE[key] = sh
     sigs = minhash_signatures(sh, 32).persist(StorageLevel.MEMORY_AND_DISK)
     cand = minhash_band_candidates(sigs, 32, 8).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    _XXHASH_SIG_CACHE[key] = sigs
-    _XXHASH_CAND_CACHE[key] = cand
-    return sigs, cand
+    return sh, sigs, cand
 
 
 @query(
@@ -734,46 +706,27 @@ _LSH_EVAL_THRESHOLD = 0.05  # deliberately BELOW the banding design point
 # index (portable_shingle_ids over the spread corpus) and each paid the
 # full ~3.5 s (sf0.1) build per call because the per-call persist/
 # unpersist pair released exactly what the next evaluator was about to
-# rebuild. The _ivf_index lifecycle applies: keyed by (applicationId,
-# dir, fixture identity), stale/dead entries pruned on miss, storage
-# MEMORY_AND_DISK so an idle session degrades to recompute, not OOM.
-# (The xxhash64 PRODUCTION path is untouched — its index plan differs,
-# so CacheManager sharing never applied across the two families.)
-_PORTABLE_SH_CACHE: dict[tuple, DataFrame] = {}
-
-
+# rebuild. Storage is MEMORY_AND_DISK so an idle session degrades to
+# recompute, not OOM. (The xxhash64 PRODUCTION path is untouched — its
+# index plan differs, so CacheManager sharing never applied across the
+# two families.)
+@session_cached("documents")
 def _portable_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     from ..operators.dedup import _spread, portable_shingle_ids
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
-    )
-    sh = session_cache_hit(_PORTABLE_SH_CACHE, key)
-    if sh is not None:
-        return sh
-    prune_stale_session_entries(_PORTABLE_SH_CACHE, key, lambda e: e)
     d = load_table(spark, sf_dir, "documents")
     # _spread: without it the pre-shuffle shingling can run
     # single-partition (the sibling operators' measured 6 s vs 0.3 s)
-    sh = portable_shingle_ids(_spread(d), "doc_id", "text").persist(
+    return portable_shingle_ids(_spread(d), "doc_id", "text").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    _PORTABLE_SH_CACHE[key] = sh
-    return sh
 
 
 # Session-cached (signatures, band-candidates) for the 32-hash/8-band
-# portable pipeline — the SAME lifecycle as _PORTABLE_SH_CACHE one
-# derivation later: minhash_estimate_error and bbit_minhash_error each
+# portable pipeline, one derivation after _portable_shingle_index:
+# minhash_estimate_error and bbit_minhash_error each
 # referenced the signature frame in FOUR subplan instances (cand twice
 # — once under inter's broadcast, once under agree — plus the sga/sgb
 # aliases) and the candidate frame twice, so every call re-ran the
@@ -783,12 +736,8 @@ def _portable_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # plan-dedup additionally substitutes these entries into
 # minhash_lsh_pairs(portable_hash=True)'s identical sigs/cand
 # subtrees (lsh_recall's found side, dedup_clusters_minhash) and into
-# lsh_band_sweep's shared sigs scan. Two dicts (same key) because the
-# prune helper unpersists exactly one frame per entry.
-_PORTABLE_SIG_CACHE: dict[tuple, DataFrame] = {}
-_PORTABLE_CAND_CACHE: dict[tuple, DataFrame] = {}
-
-
+# lsh_band_sweep's shared sigs scan.
+@session_cached("documents")
 def _portable_sigs_cand(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -798,23 +747,7 @@ def _portable_sigs_cand(
         minhash_band_candidates,
         minhash_signatures,
     )
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
-    )
-    sigs = session_cache_hit(_PORTABLE_SIG_CACHE, key)
-    cand = session_cache_hit(_PORTABLE_CAND_CACHE, key)
-    if sigs is not None and cand is not None:
-        return sigs, cand
-    prune_stale_session_entries(_PORTABLE_SIG_CACHE, key, lambda e: e)
-    prune_stale_session_entries(_PORTABLE_CAND_CACHE, key, lambda e: e)
     sh = _portable_shingle_index(spark, sf_dir)
     # MEMORY_AND_DISK, measured against DISK_ONLY on an idle host:
     # the family (recall/bbit/estimate/neardup/band_sweep) summed
@@ -828,8 +761,6 @@ def _portable_sigs_cand(
     cand = minhash_band_candidates(sigs, 32, 8).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    _PORTABLE_SIG_CACHE[key] = sigs
-    _PORTABLE_CAND_CACHE[key] = cand
     return sigs, cand
 
 
@@ -1265,18 +1196,6 @@ def span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session cache for the (0.2, max_df=100) exact-pair-graph cluster
-# labels — the dedup analogue of vectors._IVF_SERVE_CACHE: clustering
-# is deterministic (exact pair graph + min-label CC), so serve-many
-# consumers read one materialized label frame instead of re-running
-# the iterative CC per call. Same key discipline as the IVF cache:
-# applicationId (a stopped session's frames are never reused) + the
-# fixture identity (a mid-process regeneration re-clusters). The
-# PARITY queries (dedup_clusters_exact, dedup_cluster_stats) stay
-# recompute-per-call, exactly like ivf_ann_topk_distributed trains
-# per call while ivf_ann_serve serves from the cache.
-_CLUSTER_LABEL_CACHE: dict[tuple, DataFrame] = {}
-
 # Session cache for the PORTABLE MinHash near-dup pair graph at the
 # graded configuration (32 hashes / 8 bands / J >= 0.8 / md5 shingle
 # ids): FOUR queries consume this exact frame per fixture
@@ -1286,45 +1205,18 @@ _CLUSTER_LABEL_CACHE: dict[tuple, DataFrame] = {}
 # sf0.1 beyond the shared shingle frame). The entry is the
 # localCheckpointed FINAL pair frame (narrow: two ids + jaccard,
 # ~100s of rows at fixture SFs, pair-graph-sized at any scale), so a
-# hit costs one block read. The _cluster_labels lifecycle applies
-# verbatim: keyed by (applicationId, dir, fixture identity),
-# head-probed on hit (a lost executor block evicts and rebuilds
-# instead of poisoning the entry), stale entries pruned on miss. The
-# oracles still rebuild the full pipeline from scratch every call, so
-# the differential keeps certifying the MACHINERY, not the cache.
-_PORTABLE_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
+# hit costs one block read. The oracles still rebuild the full
+# pipeline from scratch every call, so the differential keeps
+# certifying the MACHINERY, not the cache.
+@session_cached("documents")
 def _minhash_portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
-    )
-    pairs = session_cache_hit(_PORTABLE_PAIRS_CACHE, key)
-    if pairs is not None:
-        try:
-            pairs.head(1)
-        except Exception:
-            del _PORTABLE_PAIRS_CACHE[key]
-            pairs = None
-    if pairs is None:
-        prune_stale_session_entries(_PORTABLE_PAIRS_CACHE, key, lambda e: e)
-        # pre-pin the shared portable sigs/cand (see lsh_recall note)
-        _portable_sigs_cand(spark, sf_dir)
-        pairs = ops.minhash_lsh_pairs(
-            load_table(spark, sf_dir, "documents"),
-            "doc_id", "text", n_hashes=32, bands=8,
-            threshold=0.8, portable_hash=True,
-        ).localCheckpoint(eager=True)
-        _PORTABLE_PAIRS_CACHE[key] = pairs
-    return pairs
+    # pre-pin the shared portable sigs/cand (see lsh_recall note)
+    _portable_sigs_cand(spark, sf_dir)
+    return ops.minhash_lsh_pairs(
+        load_table(spark, sf_dir, "documents"),
+        "doc_id", "text", n_hashes=32, bands=8,
+        threshold=0.8, portable_hash=True,
+    ).localCheckpoint(eager=True)
 
 
 # Labels of the iterative min-label CC over the cached portable pair
@@ -1334,71 +1226,28 @@ def _minhash_portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixpoint independently against the same oracle is that query's whole
 # point). The CC output is already a localCheckpoint (the operator
 # truncates its fixpoint lineage), so the entry costs no extra pin.
-_MINHASH_LABEL_CACHE: dict[tuple, DataFrame] = {}
-
-
+@session_cached("documents")
 def _minhash_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
-    )
-    labels = session_cache_hit(_MINHASH_LABEL_CACHE, key)
-    if labels is not None:
-        try:
-            labels.head(1)
-        except Exception:
-            del _MINHASH_LABEL_CACHE[key]
-            labels = None
-    if labels is None:
-        prune_stale_session_entries(_MINHASH_LABEL_CACHE, key, lambda e: e)
-        labels = ops.dedup_clusters(_minhash_portable_pairs(spark, sf_dir))
-        _MINHASH_LABEL_CACHE[key] = labels
-    return labels
+    return ops.dedup_clusters(_minhash_portable_pairs(spark, sf_dir))
 
 
+# Session cache for the (0.2, max_df=100) exact-pair-graph cluster
+# labels — the dedup analogue of vectors._ivf_index: clustering is
+# deterministic (exact pair graph + min-label CC), so serve-many
+# consumers read one materialized label frame instead of re-running
+# the iterative CC per call. The PARITY queries (dedup_clusters_exact,
+# dedup_cluster_stats) stay recompute-per-call, exactly like
+# ivf_ann_topk_distributed trains per call while ivf_ann_serve serves
+# from the cache.
+@session_cached("documents")
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
-    )
-    labels = session_cache_hit(_CLUSTER_LABEL_CACHE, key)
-    if labels is not None:
-        try:
-            # touch one block: the cached frame is a localCheckpoint
-            # (executor-block-backed, non-reliable), so a lost block —
-            # executor churn in a long-lived session — would otherwise
-            # poison the entry forever (every consumer throws, and the
-            # liveness/staleness eviction below never fires). A failed
-            # probe evicts and rebuilds instead.
-            labels.head(1)
-        except Exception:
-            del _CLUSTER_LABEL_CACHE[key]
-            labels = None
-    if labels is None:
-        prune_stale_session_entries(_CLUSTER_LABEL_CACHE, key, lambda e: e)
-        d = load_table(spark, sf_dir, "documents")
-        pairs = ops.ngram_jaccard_pairs(
-            d, "doc_id", "text", n=3, threshold=0.2
-        ).select("doc_a", "doc_b")
-        # dedup_clusters already localCheckpoints its fixpoint, so the
-        # returned frame is executor-side state with no CC lineage
-        labels = ops.dedup_clusters(pairs)
-        _CLUSTER_LABEL_CACHE[key] = labels
-    return labels
+    d = load_table(spark, sf_dir, "documents")
+    pairs = ops.ngram_jaccard_pairs(
+        d, "doc_id", "text", n=3, threshold=0.2
+    ).select("doc_a", "doc_b")
+    # dedup_clusters already localCheckpoints its fixpoint, so the
+    # returned frame is executor-side state with no CC lineage
+    return ops.dedup_clusters(pairs)
 
 
 @query(
@@ -1549,32 +1398,14 @@ def _winnow_selection(d: DataFrame) -> DataFrame:
 # Session-cached winnowed selection (doc_id, pos, h) — sketch-sized
 # (~2/(w+1) of the k-gram stream) and read by BOTH winnowing queries,
 # which each paid the full tokenize→window→argmin build per call
-# before r14. Same lifecycle as the other session caches.
-_WINNOW_SEL_CACHE: dict = {}
-
-
+# before r14.
+@session_cached("documents")
 def _winnow_selection_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
-    )
-    sel = session_cache_hit(_WINNOW_SEL_CACHE, key)
-    if sel is None:
-        prune_stale_session_entries(_WINNOW_SEL_CACHE, key, lambda e: e)
-        sel = _winnow_selection(
-            load_table(spark, sf_dir, "documents")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _WINNOW_SEL_CACHE[key] = sel
-    return sel
+    return _winnow_selection(
+        load_table(spark, sf_dir, "documents")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 @query(

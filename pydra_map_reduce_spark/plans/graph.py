@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import graph as graph_ops
+from ..session_cache import session_cached
 from ..sources.tables import load_table
 from .registry import query
 
@@ -94,109 +95,73 @@ def _supplier_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bfs_hops, lpa_communities, kcore_decompose, random_walks) and 2
 # co-purchase consumers (triangle_count, link_prediction_capped) each
 # rebuilt the lineitem scan + self-join + distinct per call. The
-# cached frame is DISK_ONLY (corpus-scaling, the apriori heap rule)
-# and lifecycle-managed by prune_stale_session_entries (stale-fixture
-# sweep + LRU bound + dead-session probe). The driver's vanilla
-# session and every first-per-fixture call still build from scratch,
-# and the oracles always rebuild — the differentials keep certifying
-# the machinery, not the cache.
-_SP_EDGE_CACHE: dict = {}
-_COP_EDGE_CACHE: dict = {}
-
-
+# cached frame is DISK_ONLY (corpus-scaling, the apriori heap rule).
+# The oracles always rebuild — the differentials keep certifying the
+# machinery, not the cache.
+@session_cached("lineitem")
 def _sp_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
+    # Hash-partitioned by src BEFORE the persist (guide §2.4: two
+    # operations keyed the same way share one exchange): every
+    # iterative consumer aggregates per-round on the src side —
+    # lpa's neighbor-label counts, kcore's surviving-degree
+    # counts, random_walks' adjacency build, pagerank's
+    # distinct/out-degree — so establishing hashpartitioning(src)
+    # once at cache build removes the per-round Exchange from all
+    # of them (their round joins broadcast the node-sized frame,
+    # which preserves the streamed side's partitioning). Column
+    # form (no explicit N) keeps the partition count at
+    # spark.sql.shuffle.partitions locally and AQE-coalescible,
+    # i.e. scale-adaptive rather than tuned to either tier.
+    e = (
+        _supplier_part_edges(spark, sf_dir)
+        .repartition("src")
+        .persist(StorageLevel.DISK_ONLY)
     )
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/lineitem.parquet"),
-    )
-    e = session_cache_hit(_SP_EDGE_CACHE, key)
-    if e is None:
-        prune_stale_session_entries(_SP_EDGE_CACHE, key, lambda x: x)
-        # Hash-partitioned by src BEFORE the persist (guide §2.4: two
-        # operations keyed the same way share one exchange): every
-        # iterative consumer aggregates per-round on the src side —
-        # lpa's neighbor-label counts, kcore's surviving-degree
-        # counts, random_walks' adjacency build, pagerank's
-        # distinct/out-degree — so establishing hashpartitioning(src)
-        # once at cache build removes the per-round Exchange from all
-        # of them (their round joins broadcast the node-sized frame,
-        # which preserves the streamed side's partitioning). Column
-        # form (no explicit N) keeps the partition count at
-        # spark.sql.shuffle.partitions locally and AQE-coalescible,
-        # i.e. scale-adaptive rather than tuned to either tier.
-        e = (
-            _supplier_part_edges(spark, sf_dir)
-            .repartition("src")
-            .persist(StorageLevel.DISK_ONLY)
-        )
-        # materialize NOW: until the cached AQE plan is final, its
-        # outputPartitioning reads as unknown and the first consumer
-        # round plans with the very exchanges the repartition exists
-        # to remove (observed: round-1 of a cold lpa call kept both
-        # per-round exchanges; rounds 2+ planned exchange-free)
-        e.count()
-        _SP_EDGE_CACHE[key] = e
+    # materialize NOW: until the cached AQE plan is final, its
+    # outputPartitioning reads as unknown and the first consumer
+    # round plans with the very exchanges the repartition exists
+    # to remove (observed: round-1 of a cold lpa call kept both
+    # per-round exchanges; rounds 2+ planned exchange-free)
+    e.count()
     return e
 
 
+@session_cached("lineitem")
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (u < v) distinct co-purchase part-pair edges."""
     from pyspark.storagelevel import StorageLevel
 
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
     )
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/lineitem.parquet"),
+    # one groupBy + array pair expansion instead of the orderkey
+    # self-join (guide §2.1: the join shuffled lineitem TWICE and
+    # sort-merged it; this shuffles it once). collect_set + sorted
+    # array + i<j combinations emits exactly the self-join's
+    # distinct-per-order (u < v) pairs: strict < never paired
+    # equal partkeys, and md-order duplicates collapse in the set.
+    # Per-order arrays are order-sized (≤7 lines), never
+    # corpus-sized.
+    parts = li.groupBy("l_orderkey").agg(
+        F.array_sort(F.collect_set("l_partkey")).alias("ps")
     )
-    e = session_cache_hit(_COP_EDGE_CACHE, key)
-    if e is None:
-        prune_stale_session_entries(_COP_EDGE_CACHE, key, lambda x: x)
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
+    pair_arrays = F.flatten(
+        F.transform(
+            "ps",
+            lambda x, i: F.transform(
+                F.slice(F.col("ps"), i + 2, F.size("ps") - i - 1),
+                lambda y: F.struct(x.alias("u"), y.alias("v")),
+            ),
         )
-        # one groupBy + array pair expansion instead of the orderkey
-        # self-join (guide §2.1: the join shuffled lineitem TWICE and
-        # sort-merged it; this shuffles it once). collect_set + sorted
-        # array + i<j combinations emits exactly the self-join's
-        # distinct-per-order (u < v) pairs: strict < never paired
-        # equal partkeys, and md-order duplicates collapse in the set.
-        # Per-order arrays are order-sized (≤7 lines), never
-        # corpus-sized.
-        parts = li.groupBy("l_orderkey").agg(
-            F.array_sort(F.collect_set("l_partkey")).alias("ps")
-        )
-        pair_arrays = F.flatten(
-            F.transform(
-                "ps",
-                lambda x, i: F.transform(
-                    F.slice(F.col("ps"), i + 2, F.size("ps") - i - 1),
-                    lambda y: F.struct(x.alias("u"), y.alias("v")),
-                ),
-            )
-        )
-        e = (
-            parts.select(F.explode(pair_arrays).alias("p"))
-            .select("p.u", "p.v")
-            .distinct()
-            .persist(StorageLevel.DISK_ONLY)
-        )
-        _COP_EDGE_CACHE[key] = e
-    return e
+    )
+    return (
+        parts.select(F.explode(pair_arrays).alias("p"))
+        .select("p.u", "p.v")
+        .distinct()
+        .persist(StorageLevel.DISK_ONLY)
+    )
 
 
 @query(
@@ -339,9 +304,9 @@ def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate of the edge AGGREGATE can fall under the 32 MB
     threshold and broadcast a million-row hash relation per round
     (observed OOM at sf0.1 in a 1 GB driver). Rounds reuse the
-    session-cached edge frame (`_sp_edges_cached` — DISK_ONLY,
-    lifecycle-managed); the result is localCheckpointed (cutting the
-    lineage back to the small reached set, the pagerank pattern)."""
+    session-cached edge frame (`_sp_edges_cached`, DISK_ONLY); the
+    result is localCheckpointed (cutting the lineage back to the small
+    reached set, the pagerank pattern)."""
     edges = _sp_edges_cached(spark, sf_dir)
     dist = spark.createDataFrame([("s1", 0)], "node string, dist int")
     for k in range(1, _BFS_ROUNDS + 1):

@@ -13,7 +13,9 @@ the directory layout that enables partition pruning on re-read.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,8 +25,9 @@ from ..operators.textops import money_sum
 from ..sources.tables import SCHEMAS, load_table
 from .registry import query
 
-# Lazily-created per-process temp root: a fixed world-readable path
-# would let concurrent runs on one host clobber each other's data.
+# Lazily-created per-process temp root, removed at interpreter exit: a
+# fixed world-readable path would let concurrent runs on one host
+# clobber each other's data.
 _IO_ROOT: str | None = None
 
 # One V2-reader sibling session per application (scan_agg_pushdown):
@@ -37,6 +40,7 @@ def _tmp(name: str) -> str:
     global _IO_ROOT
     if _IO_ROOT is None:
         _IO_ROOT = tempfile.mkdtemp(prefix="pydra_spark_io_")
+        atexit.register(shutil.rmtree, _IO_ROOT, ignore_errors=True)
     return os.path.join(_IO_ROOT, name)
 
 
@@ -239,7 +243,7 @@ def scan_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     s2 = _V2_SESSIONS.get(app)
     if s2 is None:
         # Evict only entries whose SparkContext is actually STOPPED
-        # (the _IVF_SERVE_CACHE liveness pattern) — clearing
+        # (the session-cache liveness rule) — clearing
         # unconditionally would discard a live sibling SessionState
         # whenever two live apps alternate calls in one process,
         # reintroducing the per-invocation rebuild this cache exists

@@ -20,6 +20,7 @@ from ..operators.textops import (
     round_half_up,
     signed_round_half_up,
 )
+from ..session_cache import session_cached
 from ..sources.tables import load_table
 from .registry import query
 
@@ -472,60 +473,27 @@ def _linear_scored(d: DataFrame) -> DataFrame:
 # linear_quality_score, pr_curve, quality_classifier_gate,
 # platt_scaling, isotonic_calibration, ece/calibration consumers)
 # rebuilt them per call before r14. Both frames are doc-sized and
-# narrow (a few MB at sf0.1); lifecycle identical to the other
-# session caches.
-_GOPHER_FLAGS_CACHE: dict = {}
-_LSCORED_CACHE: dict = {}
-
-
+# narrow (a few MB at sf0.1).
+@session_cached("documents")
 def _gopher_flags_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     from ..operators.dedup import _spread
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
-    )
-    fl = session_cache_hit(_GOPHER_FLAGS_CACHE, key)
-    if fl is None:
-        prune_stale_session_entries(_GOPHER_FLAGS_CACHE, key, lambda e: e)
-        fl = _gopher_flags(
-            _spread(load_table(spark, sf_dir, "documents"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _GOPHER_FLAGS_CACHE[key] = fl
-    return fl
+    return _gopher_flags(
+        _spread(load_table(spark, sf_dir, "documents"))
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
+@session_cached("documents")
 def _linear_scored_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     from ..operators.dedup import _spread
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
-    )
-    sc_ = session_cache_hit(_LSCORED_CACHE, key)
-    if sc_ is None:
-        prune_stale_session_entries(_LSCORED_CACHE, key, lambda e: e)
-        sc_ = _linear_scored(
-            _spread(load_table(spark, sf_dir, "documents"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _LSCORED_CACHE[key] = sc_
-    return sc_
+    return _linear_scored(
+        _spread(load_table(spark, sf_dir, "documents"))
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 @query(
@@ -978,33 +946,12 @@ def _langid_oracle(iters: int, eta: float, dim: int) -> str:
 # labels. Frames stay localCheckpoint(eager): every GD round builds a
 # new plan atop them, and re-analyzing the trigram-build lineage per
 # round measured more expensive than the rounds themselves (r13).
-_LANGID_PX_CACHE: dict = {}
-_LANGID_Y_CACHE: dict = {}
-_QCG_PX_CACHE: dict = {}
-_QCG_LAB_CACHE: dict = {}
-
-
+@session_cached("documents")
 def _langid_features(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     from ..operators.dedup import _spread
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
-    )
-    px = session_cache_hit(_LANGID_PX_CACHE, key)
-    yl = session_cache_hit(_LANGID_Y_CACHE, key)
-    if px is not None and yl is not None:
-        return px, yl
-    prune_stale_session_entries(_LANGID_PX_CACHE, key, lambda e: e)
-    prune_stale_session_entries(_LANGID_Y_CACHE, key, lambda e: e)
     dim = _LANGID_DIM
     d = (
         _spread(load_table(spark, sf_dir, "documents"))
@@ -1041,32 +988,15 @@ def _langid_features(
         .localCheckpoint(eager=True)
     )
     yl = d.select("doc_id", "lang", "y").localCheckpoint(eager=True)
-    _LANGID_PX_CACHE[key] = px
-    _LANGID_Y_CACHE[key] = yl
     return px, yl
 
 
+@session_cached("documents")
 def _qcg_features(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     from ..operators.dedup import _spread
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
-    )
-    px = session_cache_hit(_QCG_PX_CACHE, key)
-    lab = session_cache_hit(_QCG_LAB_CACHE, key)
-    if px is not None and lab is not None:
-        return px, lab
-    prune_stale_session_entries(_QCG_PX_CACHE, key, lambda e: e)
-    prune_stale_session_entries(_QCG_LAB_CACHE, key, lambda e: e)
     dim = _QCG_DIM
     d = _spread(load_table(spark, sf_dir, "documents"))
     lab = (
@@ -1107,8 +1037,6 @@ def _qcg_features(
         )
         .localCheckpoint(eager=True)
     )
-    _QCG_PX_CACHE[key] = px
-    _QCG_LAB_CACHE[key] = lab
     return px, lab
 
 

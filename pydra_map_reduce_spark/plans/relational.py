@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.textops import money_sum, round_half_up
+from ..session_cache import session_cached
 from ..sources.tables import load_table
 from .registry import query
 
@@ -1178,31 +1179,12 @@ def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (order-sized rows carrying ≤7-element arrays — doc-sized class, the
 # r14 cache-payoff rule's winning side). One corpus shuffle builds it
 # once per (app, dir, fixture); every association_rules call derives
-# pairs / item counts / the basket total map-side from it. Lifecycle =
-# the standard keyed session-cache (prune on miss, LRU-bounded).
-_BRAND_SETS_CACHE: dict = {}
-
-
+# pairs / item counts / the basket total map-side from it.
+@session_cached("lineitem", "part")
 def _brand_sets_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/lineitem.parquet"),
-        _fixture_key(f"{sf_dir}/part.parquet"),
-    )
-    sets = session_cache_hit(_BRAND_SETS_CACHE, key)
-    if sets is not None:
-        return sets
-    prune_stale_session_entries(_BRAND_SETS_CACHE, key, lambda e: e)
-    sets = (
+    return (
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .join(
@@ -1216,8 +1198,6 @@ def _brand_sets_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_set("item")).alias("items"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _BRAND_SETS_CACHE[key] = sets
-    return sets
 
 
 @query(
@@ -1770,6 +1750,25 @@ def quantile_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Per-order sorted DISTINCT part arrays of the baskets with ≥2 parts,
+# apriori_triples' one corpus shuffle. DISK_ONLY, not localCheckpoint:
+# the frame is corpus-sized (one row per order), and the apriori
+# heap-pin rule (r13 stress tier) keeps corpus-scaling pins off the
+# heap.
+@session_cached("lineitem")
+def _basket_part_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.storagelevel import StorageLevel
+
+    return (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .groupBy("l_orderkey")
+        .agg(F.array_sort(F.collect_set("l_partkey")).alias("items"))
+        .filter(F.size("items") >= 2)
+        .persist(StorageLevel.DISK_ONLY)
+    )
+
+
 @query(
     "apriori_triples",
     oracle="""
@@ -1828,21 +1827,9 @@ def apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus exchanges + a sort-merge join) plus a third exchange for
     # the p1⋈p2 triple-extension join; all three are gone and the
     # row-for-row identical pair/triple multisets are generated inside
-    # one projection each. DISK_ONLY, not localCheckpoint: the basket
-    # frame is corpus-sized (one row per order), and the apriori
-    # heap-pin rule (r13 stress tier) keeps corpus-scaling pins off
-    # the heap; CacheManager plan-dedup shares the pin across repeated
-    # calls, the shingle-frame lifecycle rule.
-    from pyspark.storagelevel import StorageLevel
-
-    sets = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("items"))
-        .filter(F.size("items") >= 2)
-        .persist(StorageLevel.DISK_ONLY)
-    )
+    # one projection each. The basket frame is a session cache
+    # (_basket_part_sets).
+    sets = _basket_part_sets(spark, sf_dir)
     pairs = sets.select(
         F.explode(
             F.expr(

@@ -22,14 +22,20 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session_cache import session_cached
 from ..sources.tables import SCHEMAS, _pin_conf, convert_events_ts, events_ts_unit, load_table
+from .io import _tmp
 from .registry import query
 
 
-# per-process two-part split of events for multi-micro-batch streams,
-# keyed by (fixture identity, session) — a regeneration or new session
-# re-materializes instead of reusing a stale split
-_SPLIT_SRC_CACHE: dict[tuple, str] = {}
+@session_cached("events")
+def _events_split(spark: SparkSession, sf_dir: str) -> str:
+    """Two-part split of events for multi-micro-batch streams, written
+    once per (fixture, session): a regeneration or a new session
+    re-materializes instead of reusing a stale split."""
+    src = _tmp("events_split_" + uuid.uuid4().hex[:12])
+    load_table(spark, sf_dir, "events").repartition(2).write.parquet(src)
+    return src
 
 
 def _stream_events(
@@ -57,28 +63,19 @@ def _stream_events(
     queries whose results are micro-batch-count independent. The
     split is written ONCE per (fixture, session) via the batch loader
     (which normalizes the ts unit, so no footer branch is needed
-    here) into a private mkdtemp — no cross-process sharing, no
-    races."""
+    here) into the private per-process root of ``io._tmp`` — no
+    cross-process sharing, no races — removed at interpreter exit."""
     import hashlib
 
     target = os.path.abspath(f"{sf_dir}/events.parquet")
     _pin_conf(spark, "spark.sql.session.timeZone", "UTC")
 
     if multi_batch:
-        from ..sources.tables import _fixture_key
-
-        key = (_fixture_key(target), spark.sparkContext.applicationId)
-        src = _SPLIT_SRC_CACHE.get(key)
-        if src is None:
-            root = tempfile.mkdtemp(prefix="pydra_stream_split_")
-            src = os.path.join(root, "events_split")
-            load_table(spark, sf_dir, "events").repartition(2).write.parquet(src)
-            _SPLIT_SRC_CACHE[key] = src
         return (
             spark.readStream.schema(SCHEMAS["events"])
             .format("parquet")
             .option("maxFilesPerTrigger", 1)
-            .load(src)
+            .load(_events_split(spark, sf_dir))
         )
 
     key = hashlib.md5(target.encode()).hexdigest()[:12]
@@ -370,6 +367,8 @@ def streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         spark.catalog.dropTempView(name)
+        # the result is an eager snapshot, so the source files can go
+        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..operators import similarity as ops
 from ..operators.textops import round_half_up, signed_round_half_up
+from ..session_cache import session_cached
 from ..sources.tables import load_table
 from .registry import query
 
@@ -428,56 +429,32 @@ def ivf_ann_topk_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Trained IVF index, one per (session, fixture state): production ANN
 # builds its index offline and serves many queries from it — caching
 # here makes the registered serving query measure SERVING (probe +
-# rescore), not a per-call retrain. Keyed by applicationId (a stopped
-# session's unusable frames are never reused by a new one) AND the
-# fixture identity from sources.tables._fixture_key, so a mid-process
-# fixture regeneration retrains instead of serving neighbors from the
-# old corpus (the same invalidation contract as the loader's own
-# footer/ts-unit caches). Entries whose SparkContext has stopped are
-# pruned on each miss, bounding the cache to live sessions.
-_IVF_SERVE_CACHE: dict[tuple, "ops.IvfIndex"] = {}
-
-
+# rescore), not a per-call retrain.
+@session_cached("embeddings")
 def _ivf_index(spark: SparkSession, sf_dir: str) -> "ops.IvfIndex":
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
+    from math import isqrt
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/embeddings.parquet"),
+    emb = load_table(spark, sf_dir, "embeddings")
+    # k ~ sqrt(n) cell sizing, REAL (r13 verdict next #4): with
+    # n_clusters growing as sqrt(corpus), expected cell size is
+    # also sqrt(n), so semantic_dedup's in-cell exact rescore
+    # (Σ|cell|²) stays ~linear in the corpus — the SemDeDup scale
+    # claim the docstrings made, now executed. The 64 floor keeps
+    # every fixture SF (n ≤ 2000 → √n ≤ 44) at exactly the 64
+    # cells the graded oracles hard-code; the derived tier
+    # (n = 20k → 141 cells) exercises the growth path and is
+    # measured in the stress sweep. One metadata-cheap count()
+    # per cache miss prices the sizing.
+    n_clusters = max(64, isqrt(emb.count()))
+    return ops.ivf_train_distributed(
+        emb,
+        "vec_id",
+        "embedding",
+        dim=_EMB_DIM,
+        n_clusters=n_clusters,
+        lloyd_iters=2,
+        materialize=True,
     )
-    idx = session_cache_hit(_IVF_SERVE_CACHE, key)
-    if idx is None:
-        from math import isqrt
-
-        prune_stale_session_entries(_IVF_SERVE_CACHE, key, lambda e: e.flat)
-        emb = load_table(spark, sf_dir, "embeddings")
-        # k ~ sqrt(n) cell sizing, REAL (r13 verdict next #4): with
-        # n_clusters growing as sqrt(corpus), expected cell size is
-        # also sqrt(n), so semantic_dedup's in-cell exact rescore
-        # (Σ|cell|²) stays ~linear in the corpus — the SemDeDup scale
-        # claim the docstrings made, now executed. The 64 floor keeps
-        # every fixture SF (n ≤ 2000 → √n ≤ 44) at exactly the 64
-        # cells the graded oracles hard-code; the derived tier
-        # (n = 20k → 141 cells) exercises the growth path and is
-        # measured in the stress sweep. One metadata-cheap count()
-        # per cache miss prices the sizing.
-        n_clusters = max(64, isqrt(emb.count()))
-        idx = ops.ivf_train_distributed(
-            emb,
-            "vec_id",
-            "embedding",
-            dim=_EMB_DIM,
-            n_clusters=n_clusters,
-            lloyd_iters=2,
-            materialize=True,
-        )
-        _IVF_SERVE_CACHE[key] = idx
-    return idx
 
 
 # Session-cached exact brute-force ground truth for the 8-query
@@ -489,32 +466,16 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> "ops.IvfIndex":
 # (ann_batch_topk k=3, ann_recall / quantize_recall / ann_probe_curve
 # / negative_sample k=5, ndcg_eval k=10) each paid their own
 # broadcast-query corpus pass + window for the same ground truth.
-_EXACT_TOPK8_CACHE: dict = {}
 _EXACT_TOPK8_K = 10
 _EXACT_TOPK8_NQ = 8
 
 
+@session_cached("embeddings")
 def _exact_topk8_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/embeddings.parquet"),
-    )
-    t = session_cache_hit(_EXACT_TOPK8_CACHE, key)
-    if t is None:
-        prune_stale_session_entries(_EXACT_TOPK8_CACHE, key, lambda e: e)
-        t = ops.batch_cosine_topk(
-            load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding",
-            n_queries=_EXACT_TOPK8_NQ, k=_EXACT_TOPK8_K,
-        ).localCheckpoint(eager=True)
-        _EXACT_TOPK8_CACHE[key] = t
-    return t
+    return ops.batch_cosine_topk(
+        load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding",
+        n_queries=_EXACT_TOPK8_NQ, k=_EXACT_TOPK8_K,
+    ).localCheckpoint(eager=True)
 
 
 @query(
@@ -2106,36 +2067,16 @@ def _pq_adc_sum(m: int, k: int) -> str:
     )
 
 
-# Train-once PQ codebooks per (session, fixture): the _IVF_SERVE_CACHE
-# lifecycle applied to the compressed tier — the persisted int8 corpus
-# projection plus the trained per-subspace centroid literals. Stale
-# (same session+dir, older fixture) and dead-session entries are
-# pruned on each miss; the stale-but-live path releases the old
-# projection's storage first.
-_PQ_CB_CACHE: dict[tuple, tuple[DataFrame, list]] = {}
-
-
+# Train-once PQ codebooks per (session, fixture), the compressed tier
+# of the IVF index: the persisted int8 corpus projection plus the
+# trained per-subspace centroid literals.
+@session_cached("embeddings")
 def _pq_codebooks(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[list[list[int]]]]:
-    from ..operators.similarity import as_double
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/embeddings.parquet"),
-    )
-    hit = session_cache_hit(_PQ_CB_CACHE, key)
-    if hit is not None:
-        return hit
-    prune_stale_session_entries(_PQ_CB_CACHE, key, lambda e: e[0])
-
     from pyspark import StorageLevel
+
+    from ..operators.similarity import as_double
 
     dim, m, sd, k = _PQ_M * _PQ_SUBDIM, _PQ_M, _PQ_SUBDIM, _PQ_K
     e = load_table(spark, sf_dir, "embeddings").select(
@@ -2148,9 +2089,7 @@ def _pq_codebooks(
         StorageLevel.MEMORY_AND_DISK
     )
     try:
-        hit = _pq_train(flat)
-        _PQ_CB_CACHE[key] = hit
-        return hit
+        return _pq_train(flat)
     except BaseException:
         # release the corpus-sized projection on ANY training failure
         # (executor loss mid-pass, not just the empty-corpus guard) —
@@ -2237,8 +2176,8 @@ def pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook training, code assignment, LUT entries, ADC sums, and
     the exhaustive ground truth — is an EXACT BIGINT on both engines:
     no float pin anywhere except the final recall ratio. Codebooks
-    train ONCE per session (`_pq_codebooks`, the _ivf_index
-    lifecycle); determinism of the trainer means serve-from-cache is
+    train ONCE per session (`_pq_codebooks`, a session cache);
+    determinism of the trainer means serve-from-cache is
     identical to train-then-serve, which this differential proves
     every run. `ivf_pq_serve` composes the same codes with the IVF
     router.

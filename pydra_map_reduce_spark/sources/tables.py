@@ -108,73 +108,6 @@ SCHEMAS: dict[str, T.StructType] = {
 TABLES = tuple(n for n in SCHEMAS if not n.startswith("_"))
 
 
-def session_cache_hit(cache, key):
-    """Recency-refreshing lookup for the session-keyed index caches:
-    a hit re-inserts the entry at the dict's tail, so insertion order
-    doubles as LRU order for the bound below. Returns the entry or
-    None."""
-    entry = cache.get(key)
-    if entry is not None:
-        cache[key] = cache.pop(key)
-    return entry
-
-
-def prune_stale_session_entries(cache, key, frame_of, max_live: int = 3) -> None:
-    """THE one lifecycle for the session-keyed index caches
-    (_IVF_SERVE_CACHE, _PQ_CB_CACHE, _PORTABLE_SH_CACHE): on a cache
-    miss, drop every entry that is STALE (same (applicationId, dir)
-    prefix as ``key`` but an older fixture identity) or DEAD (its
-    SparkContext has stopped — probed via the entry's frame, reached
-    through ``frame_of``), releasing a stale-but-live entry's storage
-    first. Three hand-rolled copies of this loop had already started
-    to drift before the r10 review factored them here.
-
-    The cache is also BOUNDED: a long-lived session sweeping many
-    fixture dirs would otherwise pin one corpus-sized MEMORY_AND_DISK
-    index per dir concurrently (the r10 advice finding). After the
-    stale/dead sweep, live same-application entries for OTHER dirs
-    are evicted least-recently-used-first until at most
-    ``max_live - 1`` remain (leaving room for the entry about to be
-    inserted). The default 3 covers the local differential's
-    sf0.001/0.01/0.1 sweep without thrash; callers hit through
-    ``session_cache_hit`` so dict order is LRU order.
-
-    ``frame_of=None`` declares the cache holds plain Python values
-    (no pinned DataFrame storage, e.g. _UNIGRAM_CACHE's fitted piece
-    dicts): the dead-session probe and the unpersist calls are
-    skipped, but the stale sweep and the LRU bound still apply — the
-    r13 advice found a raising ``lambda e: None`` probe classified
-    every such entry DEAD, so the LRU never engaged and the 3-SF
-    sweep thrashed the cache."""
-    for k2 in list(cache):
-        stale = k2[:2] == key[:2]
-        if frame_of is None:
-            dead = False
-        else:
-            try:
-                dead = (
-                    frame_of(cache[k2]).sparkSession.sparkContext._jsc
-                    is None
-                )
-            except Exception:
-                dead = True  # unreachable JVM handle == stopped session
-        if stale or dead:
-            if stale and not dead and frame_of is not None:
-                try:
-                    frame_of(cache[k2]).unpersist()
-                except Exception:
-                    pass
-            del cache[k2]
-    same_app = [k2 for k2 in cache if k2[0] == key[0]]
-    for k2 in same_app[: max(0, len(same_app) - (max_live - 1))]:
-        if frame_of is not None:
-            try:
-                frame_of(cache[k2]).unpersist()
-            except Exception:
-                pass
-        del cache[k2]
-
-
 def _fixture_key(path: str) -> tuple[str, int, float]:
     """(first part file, part count, max part mtime) identity for a
     fixture at this instant. Keying caches on the WHOLE part-file set

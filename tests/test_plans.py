@@ -829,46 +829,60 @@ def test_ivf_serve_absent_query_id_raises(spark):
 
 
 def test_ivf_serve_reuses_trained_index(spark):
-    """Two serves in one session must hit the same trained index (the
-    cache is the point of the split): the module-level cache holds
-    exactly one entry for this (session, sf_dir) after repeated
-    calls, and repeat results are identical."""
-    from pydra_map_reduce_spark.plans import vectors as V
-
-    from pydra_map_reduce_spark.sources.tables import _fixture_key
+    """Two serves in one session hit the same trained index (the cache
+    is the point of the split), and repeat results are identical."""
+    from pydra_map_reduce_spark.plans.vectors import _ivf_index
 
     a = [tuple(r) for r in REGISTRY["ivf_ann_serve"].fn(spark, SF_DIR).collect()]
-    key = (
-        spark.sparkContext.applicationId,
-        SF_DIR,
-        _fixture_key(f"{SF_DIR}/embeddings.parquet"),
-    )
-    assert key in V._IVF_SERVE_CACHE
-    n_before = len(V._IVF_SERVE_CACHE)
+    idx = _ivf_index(spark, SF_DIR)
     b = [tuple(r) for r in REGISTRY["ivf_ann_serve"].fn(spark, SF_DIR).collect()]
+    assert _ivf_index(spark, SF_DIR) is idx
     assert a == b and len(a) == 5
-    assert len(V._IVF_SERVE_CACHE) == n_before
 
 
-def test_xxhash_cache_hit_refreshes_shingle_pin(spark, monkeypatch):
-    """A sigs/cand hit moves the shingle frame's entry to the LRU tail
-    with them, so the three dicts evict the same entry first."""
-    from pydra_map_reduce_spark.plans import dedup as D
+def test_xxhash_entry_pins_shingles_with_sigs_and_cand(spark):
+    """The xxhash shingle frame is part of the sigs/cand entry, so one
+    LRU position and one release cover all three pinned frames."""
+    from pydra_map_reduce_spark.plans.dedup import _xxhash_sigs_cand
 
-    from pydra_map_reduce_spark.sources.tables import _fixture_key
+    entry = _xxhash_sigs_cand(spark, SF_DIR)
+    assert len(entry) == 3 and all(df.is_cached for df in entry)
+    assert _xxhash_sigs_cand(spark, SF_DIR) is entry
 
-    key = (
-        spark.sparkContext.applicationId,
-        SF_DIR,
-        _fixture_key(f"{SF_DIR}/documents.parquet"),
+
+def test_session_caches_use_the_one_helper():
+    """Session caches under plans/ go through session_cache.session_cached:
+    no module-level *_CACHE dict, and no import of the removed
+    hand-rolled lifecycle functions."""
+    import ast
+    import os
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "pydra_map_reduce_spark",
+        "plans",
     )
-    other = (spark.sparkContext.applicationId, "/elsewhere", None)
-    for name in ("_XXHASH_SH_CACHE", "_XXHASH_SIG_CACHE", "_XXHASH_CAND_CACHE"):
-        monkeypatch.setattr(D, name, {key: name, other: name})
-    sigs, cand = D._xxhash_sigs_cand(spark, SF_DIR)
-    assert (sigs, cand) == ("_XXHASH_SIG_CACHE", "_XXHASH_CAND_CACHE")
-    for cache in (D._XXHASH_SH_CACHE, D._XXHASH_SIG_CACHE, D._XXHASH_CAND_CACHE):
-        assert list(cache) == [other, key]
+    removed = {"session_cache_hit", "prune_stale_session_entries"}
+    bad = []
+    for fn in sorted(os.listdir(root)):
+        if not fn.endswith(".py"):
+            continue
+        tree = ast.parse(open(os.path.join(root, fn)).read())
+        for node in tree.body:
+            targets = []
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            for t in targets:
+                if isinstance(t, ast.Name) and t.id.endswith("_CACHE"):
+                    bad.append(f"{fn}: module-level {t.id}")
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                for alias in node.names:
+                    if alias.name in removed:
+                        bad.append(f"{fn}: imports {alias.name}")
+    assert not bad, bad
 
 
 @pytest.mark.parametrize("over_limit", [False, True], ids=["broadcast", "merge"])

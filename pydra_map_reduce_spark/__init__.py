@@ -10,6 +10,7 @@ Layout:
 - ``operators`` — schema-agnostic operator library (dedup/similarity/
   textops/sessions)
 - ``session``   — SparkSession factory (AQE, Arrow, UTC, broadcast tuning)
+- ``iterate``   — the checkpointed-rounds loop of the iterative kernels
 - ``sources``   — fixture schemas + fail-fast loaders
 - ``plans``     — the graded query registry (one module per operator family)
 """

@@ -11,7 +11,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..session_cache import release
+from ..iterate import checkpointed_rounds
 
 # MinHash family h_i(x) = (a_i*x + b_i) mod p over 32-bit shingle ids.
 _P = 4_294_967_311  # smallest prime > 2^32
@@ -640,10 +640,11 @@ def dedup_clusters_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     Converges in O(log² n) rounds regardless of component DIAMETER,
     vs O(diameter) for :func:`dedup_clusters`'s label propagation —
     the variant to use when near-dup chains run deep (long transitive
-    paraphrase chains). Per round: one groupBy(min) + one join, both
-    on node ids only; each round localCheckpoints (same lineage-
-    truncation rationale as dedup_clusters) and convergence is one
-    (count, hash-sum) driver tuple per round.
+    paraphrase chains). Per step: one groupBy(min) + one join, both
+    on node ids only; each large-star and each small-star step is one
+    ``checkpointed_rounds`` round (same lineage-truncation rationale
+    as dedup_clusters) and convergence is one (count, hash-xor) driver
+    tuple after each small-star step.
 
     Star steps over the symmetrized neighborhood Γ(u), with
     m = min(Γ(u) ∪ {u}):
@@ -673,34 +674,26 @@ def dedup_clusters_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         ).first()
         return (row["n"], row["h"])
 
+    def _star_step(e: DataFrame, r: int) -> DataFrame:
+        g = _neighborhood_min(e)
+        # odd rounds large-star (v > u), even rounds small-star (v < u)
+        side = F.col("dst") > F.col("src") if r % 2 else F.col("dst") < F.col("src")
+        out = g.filter(side).select(F.col("dst").alias("src"), F.col("m").alias("dst"))
+        if not r % 2:
+            out = out.unionByName(g.select("src", F.col("m").alias("dst")).distinct())
+        return out.filter(F.col("src") != F.col("dst")).distinct()
+
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     fp = _fingerprint(edges)
-    for _ in range(max_iter):
-        g = _neighborhood_min(edges)
-        large = g.filter(F.col("dst") > F.col("src")).select(
-            F.col("dst").alias("src"), F.col("m").alias("dst")
-        )
-        edges = (
-            large.filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        g = _neighborhood_min(edges)
-        small = g.filter(F.col("dst") < F.col("src")).select(
-            F.col("dst").alias("src"), F.col("m").alias("dst")
-        )
-        self_edge = g.select("src", F.col("m").alias("dst")).distinct()
-        edges = (
-            small.unionByName(self_edge)
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    for r, edges in enumerate(
+        checkpointed_rounds(edges, _star_step, 2 * max_iter), start=1
+    ):
+        if r % 2:
+            continue  # convergence is checked after each small-star step
         new_fp = _fingerprint(edges)
         if new_fp == fp:
             break
@@ -741,49 +734,47 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
     its neighbors; converges in O(component diameter) rounds (near-dup
     components are tiny, so max_iter=10 is generous). Iterative joins
     are the one shape Catalyst can't express declaratively — each
-    round persists its frontier and the loop stops early when a round
-    changes nothing (checked via a cheap count, the only driver-side
-    value)."""
+    round is a ``checkpointed_rounds`` round (materialized, lineage
+    cut: without the cut each round's plan nests every previous join
+    and a 14-round chain stalls planning) and the loop stops early
+    when a round changes nothing (checked via a cheap count, the only
+    driver-side value)."""
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # the try must open BEFORE the eager checkpoint below — that is
-    # the first job over the persisted edges frame; failing there
-    # would pin the cache the finally exists to release
+
+    def _propagate(labels: DataFrame, _r: int) -> DataFrame:
+        neighbor_min = (
+            edges.join(labels, edges.dst == labels.doc_id)
+            .groupBy(F.col("src").alias("doc_id"))
+            .agg(F.min("cluster_id").alias("nbr_min"))
+        )
+        return labels.join(neighbor_min, "doc_id", "left").select(
+            "doc_id",
+            F.least(
+                F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
+            ).alias("cluster_id"),
+        )
+
+    # the try must open BEFORE the first round — that is the first
+    # job over the persisted edges frame; failing there would pin the
+    # cache the finally exists to release
     try:
         labels = (
             edges.select(F.col("src").alias("doc_id"))
             .distinct()
             .withColumn("cluster_id", F.col("doc_id"))
-            .localCheckpoint(eager=True)
         )
-        for _ in range(max_iter):
-            neighbor_min = (
-                edges.join(labels, edges.dst == labels.doc_id)
-                .groupBy(F.col("src").alias("doc_id"))
-                .agg(F.min("cluster_id").alias("nbr_min"))
-            )
-            updated = labels.join(neighbor_min, "doc_id", "left").select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-            # localCheckpoint (not persist): materializes AND truncates
-            # lineage — without it each round's plan nests every previous
-            # join and Catalyst planning time grows super-linearly with
-            # iteration count (observed: a 14-round chain stalls planning).
-            updated = updated.localCheckpoint(eager=True)
+        for updated in checkpointed_rounds(labels, _propagate, max_iter):
             changed = (
                 updated.join(labels.withColumnRenamed("cluster_id", "old"), "doc_id")
                 .filter(F.col("cluster_id") != F.col("old"))
                 .limit(1)
                 .count()
             )
-            release(labels)  # superseded by its own eager checkpoint
             labels = updated
             if changed == 0:
                 break

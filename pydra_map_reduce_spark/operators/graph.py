@@ -1,8 +1,9 @@
 """Generic iterative graph operators (schema-agnostic).
 
 Same design rules as the dedup connected-components family: per-round
-work is keyed joins/aggs on node ids only, every round localCheckpoints
-(lineage truncation — Catalyst planning time otherwise grows
+work is keyed joins/aggs on node ids only, every round is a
+``checkpointed_rounds`` round (an eager localCheckpoint: lineage
+truncation — Catalyst planning time otherwise grows
 super-linearly with iteration count), and nothing but 1-row scalars
 ever reaches the driver.
 """
@@ -12,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from ..iterate import checkpointed_rounds
 
 
 def pagerank(
@@ -63,14 +66,12 @@ def pagerank(
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
     # the try must open BEFORE the first materializing action — the
-    # count and the eager checkpoint below are the jobs that populate
-    # the three caches, and a failure there would otherwise pin them
+    # count and the first round below are the jobs that populate the
+    # three caches, and a failure there would otherwise pin them
     try:
         n_total = nodes.count()  # 1 scalar, fixed for the whole run
-        ranks = nodes.withColumn("rank", F.lit(1.0)).localCheckpoint(
-            eager=True
-        )
-        for _ in range(n_iter):
+
+        def update(ranks: DataFrame, _r: int) -> DataFrame:
             contribs = (
                 ed.join(ranks, ed.src == ranks.node)
                 .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
@@ -82,7 +83,7 @@ def pagerank(
                 ranks.join(dangling_nodes, "node", "left_semi")
                 .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
             )
-            ranks = (
+            return (
                 nodes.join(contribs, nodes.node == contribs.dst, "left")
                 .crossJoin(F.broadcast(dangling))
                 .select(
@@ -93,8 +94,11 @@ def pagerank(
                         * (F.coalesce(F.col("in_sum"), F.lit(0.0)) + F.col("dm") / n_total)
                     ).alias("rank"),
                 )
-                .localCheckpoint(eager=True)
             )
+
+        ranks = nodes.withColumn("rank", F.lit(1.0))
+        for ranks in checkpointed_rounds(ranks, update, n_iter):
+            pass
     finally:
         # unpersist on EVERY exit: a mid-loop failure (task
         # error, interrupt) would otherwise pin three

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session_cache import release
+from ..iterate import checkpointed_rounds
 from .textops import (
     round_half_up,
     signed_round_half_up,
@@ -578,9 +578,10 @@ def ivf_train_distributed(
        centroid frame (no posexplode, no pivot). A cell losing all
        members DROPS from the frame (its fan-out rows vanish in the
        inner join next round) — mirroring the unrolled-Lloyd oracle.
-       The bounded (≤ n_clusters × dim) result is localCheckpoint'd
-       to cut the per-round lineage — executor-side state, the
-       distributed analogue of ivf_topk's driver sync.
+       The bounded (≤ n_clusters × dim) result is one
+       ``checkpointed_rounds`` round (localCheckpoint'd to cut the
+       per-round lineage, the superseded round freed) — executor-side
+       state, the distributed analogue of ivf_topk's driver sync.
 
     Query time lives in ``ivf_serve_distributed``: cell ranking and
     the final rescore join the 1-row query frame on a constant key
@@ -652,22 +653,21 @@ def ivf_train_distributed(
             .agg(F.min(F.struct("d2", "cid")).getField("cid").alias("cid"))
         )
 
-    for r in range(lloyd_iters):
+    def lloyd(cents_df: DataFrame, _r: int) -> DataFrame:
         # update joins the narrow assignment back to the flat corpus on
         # vec_id — one keyed exchange per round whose bytes equal the
         # corpus vectors crossing once (the same traffic the wide-agg
         # form paid inside its shuffle), then a dim-wide avg straight
         # to the next flat centroid frame
-        updated = (
-            assign(cents)
+        return (
+            assign(cents_df)
             .join(flat, "vec_id")
             .groupBy("cid")
             .agg(*[F.expr(f"avg(v{i})").alias(f"m{i}") for i in range(dim)])
-            .localCheckpoint(eager=True)
         )
-        if r:  # free the superseded round; round 0 read the seeds
-            release(cents)
-        cents = updated
+
+    for cents in checkpointed_rounds(cents, lloyd, lloyd_iters):
+        pass
     assigned = assign(cents)
     if materialize:
         # cut ALL training lineage: the inverted lists become

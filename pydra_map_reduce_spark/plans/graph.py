@@ -23,8 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..iterate import checkpointed_rounds
 from ..operators import graph as graph_ops
-from ..session_cache import session_cached
+from ..session_cache import release, session_cached
 from ..sources.tables import load_table
 from .registry import query
 
@@ -849,14 +850,8 @@ def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISK_ONLY supplier↔part graph (`_sp_edges_cached`)."""
 
     edges = _sp_edges_cached(spark, sf_dir)
-    # symmetrized graph: every node appears as src
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("lbl"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(_LPA_ROUNDS):
+
+    def propagate(labels: DataFrame, _r: int) -> DataFrame:
         # label frame is node-sized — broadcast it (the bfs
         # reached-set rule) so the corpus-sized edge frame is always
         # the streamed probe side. The edge frame is SYMMETRIC (every
@@ -879,7 +874,7 @@ def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         # semantically identical here: mode's object-hash-agg buffer
         # (a per-group hash map) was SLOWER (warm 3.3–4.7 s vs
         # 2.3–2.8 s), so the two-step count+min(struct) form stays.
-        labels = (
+        return (
             cnt.groupBy("node")
             .agg(
                 F.min(
@@ -889,15 +884,25 @@ def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("m")
             )
             .select("node", F.col("m.lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
         )
-    return (
+
+    # symmetrized graph: every node appears as src
+    labels = (
+        edges.select(F.col("src").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("lbl"))
+    )
+    for labels in checkpointed_rounds(labels, propagate, _LPA_ROUNDS):
+        pass
+    top = (
         labels.groupBy(F.col("lbl").alias("community"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
         .orderBy(F.col("n_nodes").desc(), "community")
         .limit(20)
         .localCheckpoint(eager=True)
     )
+    release(labels)
+    return top
 
 
 _KCORE_ROUNDS = 5  # fixed peeling rounds (unrolled in the oracle)
@@ -962,16 +967,8 @@ def kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     being the convergence alternative."""
 
     edges = _sp_edges_cached(spark, sf_dir)
-    alive = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # bounded driver scalars (exact ints — identical floor division
-    # in the oracle); the ivf seed-collect precedent
-    k = edges.count() // alive.count()
-    out_rows = []
-    for r in range(1, _KCORE_ROUNDS + 1):
+
+    def peel(alive: DataFrame, _r: int) -> DataFrame:
         ax = alive.select(F.col("node").alias("x_n"))
         ay = alive.select(F.col("node").alias("y_n"))
         # both alive sides are node-sized — broadcast them (the bfs
@@ -982,12 +979,18 @@ def kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("src")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        alive = (
-            deg.filter(F.col("c") >= k)
-            .select(F.col("src").alias("node"))
-            .localCheckpoint(eager=True)
-        )
+        return deg.filter(F.col("c") >= k).select(F.col("src").alias("node"))
+
+    alive = edges.select(F.col("src").alias("node")).distinct()
+    # bounded driver scalars (exact ints — identical floor division
+    # in the oracle); the ivf seed-collect precedent
+    k = edges.count() // alive.count()
+    out_rows = []
+    for r, alive in enumerate(
+        checkpointed_rounds(alive, peel, _KCORE_ROUNDS), start=1
+    ):
         out_rows.append((r, alive.count()))
+    release(alive)
     return spark.createDataFrame(
         out_rows, "round int, n_alive bigint"
     ).orderBy("round")
@@ -1071,40 +1074,44 @@ def random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_list("dst")).alias("ns"))
         .persist(StorageLevel.DISK_ONLY)
     )
-    try:
-        frontier = adj.select(
-            F.col("src").alias("start"), F.col("src").alias("cur")
-        ).localCheckpoint(eager=True)
-        visited = []
-        for t in range(1, _RW_STEPS + 1):
-            h = F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("start"), F.lit(f"|{t}"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            frontier = (
-                F.broadcast(frontier)
-                .join(adj, frontier["cur"] == adj["src"])
-                .select(
-                    "start",
-                    F.element_at(
-                        "ns", (h % F.size("ns")).cast("int") + 1
-                    ).alias("cur"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            visited.append(frontier.select("cur"))
-        allv = visited[0]
-        for v in visited[1:]:
-            allv = allv.unionAll(v)
+
+    def walk(walks: DataFrame, t: int) -> DataFrame:
+        h = F.conv(
+            F.substring(F.md5(F.concat(F.col("start"), F.lit(f"|{t}"))), 1, 8),
+            16,
+            10,
+        ).cast("bigint")
         return (
-            allv.groupBy(F.col("cur").alias("node"))
+            F.broadcast(walks)
+            .join(adj, walks["cur"] == adj["src"])
+            .select(
+                "start",
+                "visited",
+                F.element_at("ns", (h % F.size("ns")).cast("int") + 1).alias("cur"),
+            )
+            .withColumn("visited", F.concat("visited", F.array("cur")))
+        )
+
+    try:
+        # each walk carries the nodes it visited, so only the current
+        # round is live; the edge frame is symmetric, so no walk ends
+        # early and the array holds exactly one node per step
+        walks = adj.select(
+            F.col("src").alias("start"),
+            F.col("src").alias("cur"),
+            F.array().cast("array<string>").alias("visited"),
+        )
+        for walks in checkpointed_rounds(walks, walk, _RW_STEPS):
+            pass
+        top = (
+            walks.select(F.explode("visited").alias("node"))
+            .groupBy("node")
             .agg(F.count(F.lit(1)).cast("bigint").alias("visits"))
             .orderBy(F.col("visits").desc(), "node")
             .limit(20)
             .localCheckpoint(eager=True)
         )
+        release(walks)
+        return top
     finally:
         adj.unpersist()

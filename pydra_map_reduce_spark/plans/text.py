@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..iterate import checkpointed_rounds
 from ..operators import textops
 from ..operators.textops import round_half_up
 from ..session_cache import session_cached
@@ -1032,27 +1033,15 @@ _BPE_FOLD_EXPR = """aggregate(split(sp, ' '), '', (acc, t) ->
          ELSE acc || ' ' || t END)"""
 
 
-# checkpoint the evolving vocabulary every K merge rounds: each fold is
-# a lazy projection, and without a periodic cut the argmax job at round
-# k re-analyzes (and re-executes) k nested aggregate-HOF folds — the
-# documented deep-lineage trap (lang_id_train's measured fix). Measured
-# at 16 rounds/sf0.1: every-round checkpointing is the CHEAPEST cadence
-# (8.1 s vs 16.0 s at every-4) — one un-checkpointed aggregate-HOF fold
-# layer adds ~0.8 s to the next argmax job (re-analysis + fresh codegen
-# of the nested lambda), far more than the ~0.25 s checkpoint of the
-# 31-row frame it would save.
-_BPE_CKPT_EVERY = 1
-
-
 def _bpe_learn(
-    spark: SparkSession, sf_dir: str, rounds: int, *, apply_last: bool
+    spark: SparkSession, sf_dir: str, rounds: int
 ) -> tuple[list, DataFrame]:
     """Run `rounds` BPE merge rounds over the corpus vocabulary.
     Returns (one collected best-pair Row per round, the vocabulary
-    frame (word, sp, cnt) with merges applied — through the last round
-    when `apply_last`, else through rounds-1 like the training loop,
-    which never needs the final application). ONE corpus scan builds
-    the localCheckpoint'd vocab; every round is vocab-sized.
+    frame (word, sp, cnt) with all `rounds` merges applied). ONE
+    corpus scan builds the checkpointed character-level vocab (the
+    first `checkpointed_rounds` round); every later round is
+    vocab-sized.
 
     The per-round arg-max is DRIVER-SYNCED (a 1-row .first() — the
     bounded-collect class): the merge table is driver-sized BY
@@ -1060,11 +1049,16 @@ def _bpe_learn(
     winner back as a 1-row LocalRelation crossJoin keeps each fold a
     lazy projection over data, not a plan subtree — the lazy-best form
     duplicated sp's subtree into both the next arg-max and the next
-    fold, doubling the plan per round (2^rounds at 16 merges). The
-    evolving vocabulary is re-checkpointed every `_BPE_CKPT_EVERY`
-    rounds to bound fold re-execution depth. At 100 TB the shape is
-    unchanged: per round one vocab-sized keyed agg + a 1-row driver
-    sync, exactly how production BPE trainers iterate."""
+    fold, doubling the plan per round (2^rounds at 16 merges). Every
+    fold is its own checkpointed round: one un-checkpointed
+    aggregate-HOF fold layer adds ~0.8 s to the next arg-max job
+    (re-analysis + fresh codegen of the nested lambda), far more than
+    the ~0.25 s checkpoint of the 31-row frame it would save (16
+    rounds at sf0.1: 8.1 s checkpointing every round vs 16.0 s every
+    4th). The final fold is checkpointed too: the session cache hands
+    it to every bpe_encode call. At 100 TB the shape is unchanged: per
+    round one vocab-sized keyed agg + a 1-row driver sync, exactly how
+    production BPE trainers iterate."""
     d = load_table(spark, sf_dir, "documents")
     vocab = (
         d.select(F.explode(textops.tokens("text")).alias("word"))
@@ -1072,11 +1066,22 @@ def _bpe_learn(
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    sp = vocab.select(
+    chars = vocab.select(
         "word", F.trim(F.regexp_replace("word", "(.)", "$1 ")).alias("sp"), "cnt"
-    ).localCheckpoint(eager=True)
+    )
     bests = []
-    for k in range(1, rounds + 1):
+
+    def fold(sp: DataFrame, r: int) -> DataFrame:
+        if r == 1:  # round 1 materializes the character-level vocabulary
+            return sp
+        bf = spark.createDataFrame([bests[-1]]).select("bx", "by", "bxy")
+        return sp.crossJoin(F.broadcast(bf)).select(
+            "word", F.expr(_BPE_FOLD_EXPR).alias("sp"), "cnt"
+        )
+
+    for sp in checkpointed_rounds(chars, fold, rounds + 1):
+        if len(bests) == rounds:
+            break  # the last merge is applied: no arg-max left to read
         best = (
             sp.select(F.explode(F.expr(_BPE_PAIRS_EXPR)).alias("pair"), "cnt")
             .groupBy("pair")
@@ -1098,23 +1103,10 @@ def _bpe_learn(
             # (its empty-argmax rounds would empty the vocabulary via
             # the cross join), so fail loud instead of diverging
             raise ValueError(
-                f"bpe: pair vocabulary exhausted after {k - 1} of "
+                f"bpe: pair vocabulary exhausted after {len(bests)} of "
                 f"{rounds} merge rounds — lower the round count"
             )
         bests.append(best)
-        if k < rounds or apply_last:
-            bf = spark.createDataFrame(
-                [(best["bx"], best["by"], best["bxy"])],
-                "bx string, by string, bxy string",
-            )
-            sp = sp.crossJoin(F.broadcast(bf)).select(
-                "word", F.expr(_BPE_FOLD_EXPR).alias("sp"), "cnt"
-            )
-            # the final fold checkpoints too: the session cache hands
-            # it to every bpe_encode call, and an un-cut terminal fold
-            # layer would re-analyze + re-execute per consumer
-            if k % _BPE_CKPT_EVERY == 0:
-                sp = sp.localCheckpoint(eager=True)
     return bests, sp
 
 
@@ -1136,7 +1128,7 @@ _BPE_ROUNDS = 16
 def _bpe_learned(
     spark: SparkSession, sf_dir: str, rounds: int
 ) -> tuple[list, DataFrame]:
-    return _bpe_learn(spark, sf_dir, rounds, apply_last=True)
+    return _bpe_learn(spark, sf_dir, rounds)
 
 
 @query(
@@ -1165,8 +1157,8 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB posture: this is word-level BPE training as production
     tokenizers run it — ONE corpus scan builds the (word, count)
     vocabulary (map-side combined), localCheckpoint'd (and
-    re-checkpointed every `_BPE_CKPT_EVERY` folds) so the 16 merge
-    rounds replay vocab-sized work only; each round is a vocab-sized
+    re-checkpointed after every fold) so the 16 merge rounds replay
+    vocab-sized work only; each round is a vocab-sized
     pair explode + keyed agg, a 1-row driver-synced arg-max fed back
     as a LocalRelation, and a codegen string fold — no round touches
     the corpus, and the only driver traffic is the merge table

@@ -9,9 +9,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..iterate import checkpointed_rounds
 from ..operators import similarity as ops
 from ..operators.textops import round_half_up, signed_round_half_up
-from ..session_cache import session_cached
+from ..session_cache import release, session_cached
 from ..sources.tables import load_table
 from .registry import query
 
@@ -627,6 +628,47 @@ def _cov_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _unit(y: DataFrame) -> DataFrame:
+    """The d-row vector (i, v) scaled to unit L2 norm."""
+    norm = y.agg(F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("s"))
+    return y.crossJoin(F.broadcast(norm)).select(
+        "i", (F.col("v") / F.col("s")).alias("v")
+    )
+
+
+def _power3(mat: DataFrame, start_i: int) -> DataFrame:
+    """Three power-iteration rounds x <- normalize(M x) from
+    x0 = e_start_i over the (i, j, c) cell frame ``mat``: the unit
+    (i, v) iterate, checkpointed (d rows). Each round is one
+    ``checkpointed_rounds`` round holding the UNnormalized matvec
+    y = M·normalize(prev): the norm scalar and the normalized vector
+    both read y, and an uncut y doubles the matvec subtree per round
+    (2^3 by round 3 — measured ~11 s for the two components of
+    pca_top2_components). The seed is e_i itself: its norm is exactly
+    1.0, so normalizing it inside round 1 is bit-identical to the
+    unrolled oracle's x0. matvec = broadcast-join the d-row vector on
+    j + i-keyed sum, the pagerank shape at matrix scale."""
+
+    def matvec(y: DataFrame, _r: int) -> DataFrame:
+        x = _unit(y)
+        return (
+            mat.join(F.broadcast(x.withColumnRenamed("i", "j")), "j")
+            .select("i", (F.col("c") * F.col("v")).alias("t"))
+            .groupBy("i")
+            .agg(F.sum("t").alias("v"))
+        )
+
+    y = mat.select("i").distinct().select(
+        "i",
+        F.when(F.col("i") == start_i, F.lit(1.0)).otherwise(F.lit(0.0)).alias("v"),
+    )
+    for y in checkpointed_rounds(y, matvec, 3):
+        pass
+    x = _unit(y).localCheckpoint(eager=True)
+    release(y)
+    return x
+
+
 @query(
     "embedding_covariance",
     oracle=f"""
@@ -699,25 +741,12 @@ def pca_power_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below releases it once the (d-row) result is materialized
     cmat = _cov_matrix(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        x = cmat.select("i").distinct().select(
-            "i", F.when(F.col("i") == 1, F.lit(1.0)).otherwise(F.lit(0.0)).alias("v")
-        )
-        for _ in range(3):
-            y = (
-                cmat.join(F.broadcast(x.withColumnRenamed("i", "j")), "j")
-                .select("i", (F.col("c") * F.col("v")).alias("t"))
-                .groupBy("i")
-                .agg(F.sum("t").alias("v"))
-            )
-            norm = y.agg(F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("s"))
-            x = y.crossJoin(F.broadcast(norm)).select(
-                "i", (F.col("v") / F.col("s")).alias("v")
-            )
-        return x.select(
-            "i", (signed_round_half_up(F.col("v"), 6) + F.lit(0.0)).alias("loading")
-        ).localCheckpoint(eager=True)
+        x = _power3(cmat, 1)
     finally:
         cmat.unpersist()
+    return x.select(
+        "i", (signed_round_half_up(F.col("v"), 6) + F.lit(0.0)).alias("loading")
+    )
 
 
 # --- Johnson-Lindenstrauss random projection --------------------------
@@ -2855,45 +2884,19 @@ def pca_top2_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     _cov_matrix); everything after runs on d^2-row frames — matvec =
     broadcast-join the d-row iterate on j + i-keyed sum (the pagerank
     shape), deflation = two d-row broadcast joins onto the cell
-    frame. The d-row PC1 iterate localCheckpoints before it fans into
-    the Rayleigh quotient, the deflated matrix, AND the final join
-    (three consumers; an uncut iterate would replay its three matvecs
-    into each). Determinism: both engines start from the same unit
-    vectors and run identical arithmetic on covariances that agree to
-    ~1e-13 (the embedding_covariance differential pins that); six
+    frame. The d-row PC1 iterate is a checkpoint (`_power3`) before it
+    fans into the Rayleigh quotient, the deflated matrix, AND the
+    final join (three consumers). Determinism: both engines start
+    from the same unit vectors and run identical arithmetic on
+    covariances that agree to ~1e-13 (the embedding_covariance
+    differential pins that); six
     rounds of drift stay ~1e-12, far under the 6dp pin — the
     pca_power_component argument, one deflation deeper."""
     from pyspark import StorageLevel
 
     cmat = _cov_matrix(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        def power3(mat: DataFrame, start_i: int) -> DataFrame:
-            x = mat.select("i").distinct().select(
-                "i",
-                F.when(F.col("i") == start_i, F.lit(1.0))
-                .otherwise(F.lit(0.0))
-                .alias("v"),
-            )
-            for _ in range(3):
-                # the d-row iterate CHECKPOINTS per round: the norm
-                # scalar and the normalized vector both read y, and an
-                # uncut y doubles the matvec subtree per round (2^3 by
-                # round 3 — measured ~11 s for the two components;
-                # three tiny checkpoint jobs per component instead)
-                y = (
-                    mat.join(F.broadcast(x.withColumnRenamed("i", "j")), "j")
-                    .select("i", (F.col("c") * F.col("v")).alias("t"))
-                    .groupBy("i")
-                    .agg(F.sum("t").alias("v"))
-                    .localCheckpoint(eager=True)
-                )
-                norm = y.agg(F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("s"))
-                x = y.crossJoin(F.broadcast(norm)).select(
-                    "i", (F.col("v") / F.col("s")).alias("v")
-                )
-            return x
-
-        pc1 = power3(cmat, 1).localCheckpoint(eager=True)
+        pc1 = _power3(cmat, 1)
         lam = (
             cmat.join(F.broadcast(pc1.select(F.col("i"), F.col("v").alias("a"))), "i")
             .join(
@@ -2920,18 +2923,17 @@ def pca_top2_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         try:
-            pc2 = power3(cov2, 2)
-            return (
-                pc1.select("i", F.col("v").alias("v1"))
-                .join(pc2.select("i", F.col("v").alias("v2")), "i")
-                .select(
-                    "i",
-                    (signed_round_half_up(F.col("v1"), 6) + F.lit(0.0)).alias("pc1"),
-                    (signed_round_half_up(F.col("v2"), 6) + F.lit(0.0)).alias("pc2"),
-                )
-                .localCheckpoint(eager=True)
-            )
+            pc2 = _power3(cov2, 2)
         finally:
             cov2.unpersist()
     finally:
         cmat.unpersist()
+    return (
+        pc1.select("i", F.col("v").alias("v1"))
+        .join(pc2.select("i", F.col("v").alias("v2")), "i")
+        .select(
+            "i",
+            (signed_round_half_up(F.col("v1"), 6) + F.lit(0.0)).alias("pc1"),
+            (signed_round_half_up(F.col("v2"), 6) + F.lit(0.0)).alias("pc2"),
+        )
+    )

@@ -1262,12 +1262,18 @@ def test_dedup_clusters_minhash_books_balance(spark):
 #              sampled/non-deterministic materialization, and a
 #              persist could silently recompute on block loss where a
 #              checkpoint fails loudly (stable_row_ids class)
+#
+# A call of iterate.checkpointed_rounds is a site too (it checkpoints
+# every round of its state), counted in its caller's row; its state
+# must be NODE or MODEL class — a corpus-sized round state fails here.
 _LOCALCHECKPOINT_AUDIT = {
     # (module, function): (n_sites, class)
-    ("operators/dedup.py", "dedup_clusters"): (2, "NODE"),
-    ("operators/dedup.py", "dedup_clusters_star"): (3, "NODE"),
+    # the helper's one site; each caller's row below classes its state
+    ("iterate.py", "checkpointed_rounds"): (1, "NODE"),
+    ("operators/dedup.py", "dedup_clusters"): (1, "NODE"),
+    ("operators/dedup.py", "dedup_clusters_star"): (1, "NODE"),
     ("operators/dedup.py", "minhash_lsh_pairs"): (1, "CORPUS_N"),
-    ("operators/graph.py", "pagerank"): (2, "NODE"),
+    ("operators/graph.py", "pagerank"): (1, "NODE"),
     ("operators/similarity.py", "ivf_train_distributed"): (2, "MODEL"),
     ("plans/analytics.py", "chi2_independence"): (1, "MODEL"),
     ("plans/corpus.py", "dsir_selection"): (1, "RESULT"),
@@ -1282,11 +1288,11 @@ _LOCALCHECKPOINT_AUDIT = {
     ("plans/dedup.py", "span_width_sweep"): (1, "CORPUS_N"),
     ("plans/events.py", "behavior_profile_topk"): (1, "CORPUS_N"),
     ("plans/graph.py", "bfs_hops"): (1, "NODE"),
-    ("plans/graph.py", "kcore_decompose"): (2, "NODE"),
+    ("plans/graph.py", "kcore_decompose"): (1, "NODE"),
     ("plans/graph.py", "link_prediction_capped"): (1, "RESULT"),
     ("plans/graph.py", "link_prediction_jaccard"): (1, "CORPUS_N"),
-    ("plans/graph.py", "lpa_communities"): (3, "NODE"),
-    ("plans/graph.py", "random_walks"): (3, "NODE"),
+    ("plans/graph.py", "lpa_communities"): (2, "NODE"),
+    ("plans/graph.py", "random_walks"): (2, "NODE"),
     ("plans/graph.py", "recursive_cte_hops"): (1, "CORPUS_N"),
     ("plans/graph.py", "triangle_count"): (1, "RESULT"),
     ("plans/joins.py", "blocking_quality"): (1, "RESULT"),
@@ -1305,23 +1311,23 @@ _LOCALCHECKPOINT_AUDIT = {
     ("plans/streaming.py", "streaming_parquet_sink"): (1, "RESULT"),
     ("plans/streaming.py", "streaming_rate_source"): (1, "RESULT"),
     ("plans/text.py", "_bigram_lm_frames"): (3, "MODEL"),
-    ("plans/text.py", "_bpe_learn"): (2, "MODEL"),
+    ("plans/text.py", "_bpe_learn"): (1, "MODEL"),
     ("plans/text.py", "_unigram_em"): (3, "MODEL"),
     ("plans/text.py", "tfidf_doc_similarity"): (1, "CORPUS_N"),
     ("plans/vectors.py", "_exact_topk8_cached"): (1, "MODEL"),
+    ("plans/vectors.py", "_power3"): (2, "MODEL"),
     ("plans/vectors.py", "ann_probe_curve"): (1, "CORPUS_N"),
     ("plans/vectors.py", "logreg_train"): (1, "CORPUS_N"),
-    ("plans/vectors.py", "pca_power_component"): (1, "MODEL"),
-    ("plans/vectors.py", "pca_top2_components"): (2, "MODEL"),
-    ("plans/vectors.py", "power3"): (1, "MODEL"),
 }
 
 
 def test_localcheckpoint_sites_audited():
-    """Every localCheckpoint call site must appear in the audited
-    allowlist above with its exact site count — adding a heap pin
-    without classifying it (corpus-TEXT frames must be DISK_ONLY,
-    the apriori rule) fails here."""
+    """Every localCheckpoint call site and every checkpointed_rounds
+    call must appear in the audited allowlist above with its exact
+    site count — adding a heap pin without classifying it
+    (corpus-TEXT frames must be DISK_ONLY, the apriori rule) fails
+    here, and so does a checkpointed_rounds state that is not NODE or
+    MODEL class."""
     import ast
     import os
 
@@ -1330,6 +1336,7 @@ def test_localcheckpoint_sites_audited():
         "pydra_map_reduce_spark",
     )
     found: dict[tuple, int] = {}
+    rounds_callers: set[tuple] = set()
     for dirpath, _dirs, files in os.walk(root):
         if "__pycache__" in dirpath:
             continue
@@ -1346,7 +1353,11 @@ def test_localcheckpoint_sites_audited():
                         (node.lineno, node.end_lineno or node.lineno, node.name)
                     )
             for node in ast.walk(tree):
-                if (
+                is_rounds = isinstance(node, ast.Call) and (
+                    getattr(node.func, "id", None) == "checkpointed_rounds"
+                    or getattr(node.func, "attr", None) == "checkpointed_rounds"
+                )
+                if is_rounds or (
                     isinstance(node, ast.Attribute)
                     and node.attr == "localCheckpoint"
                 ):
@@ -1355,6 +1366,14 @@ def test_localcheckpoint_sites_audited():
                         if s <= node.lineno <= e and s > enc_start:
                             enc, enc_start = name, s
                     found[(rel, enc)] = found.get((rel, enc), 0) + 1
+                    if is_rounds:
+                        rounds_callers.add((rel, enc))
+    assert rounds_callers, "no checkpointed_rounds call found: scan is stale"
+    bad = sorted(
+        k for k in rounds_callers
+        if _LOCALCHECKPOINT_AUDIT.get(k, (0, ""))[1] not in ("NODE", "MODEL")
+    )
+    assert not bad, f"checkpointed_rounds state must be NODE or MODEL class: {bad}"
     audited = {k: v[0] for k, v in _LOCALCHECKPOINT_AUDIT.items()}
     assert found == audited, (
         "localCheckpoint heap-pin audit drift — classify new sites in "

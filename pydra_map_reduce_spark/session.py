@@ -28,12 +28,32 @@ logical plans scale to a multi-executor cluster:
   flag, so ``-XX:Tier4*`` flags configured anywhere else override the
   policy. Cluster deployments (a master given elsewhere) and executor
   JVMs keep HotSpot's default policy.
+- Collector, local mode only: the same launch adds ``-XX:+UseSerialGC``
+  (``_SERIAL_GC``). HotSpot picks G1 on any host with two or more CPUs
+  and about 2 GB of memory, and G1 grew the one local JVM's heap toward
+  the whole 1 GB default although the ``relational_x10`` benchmark
+  keeps 95-129 MB live after a full GC. The serial collector compacts
+  the whole heap and grows it only when a collection leaves less than
+  40 % free: there the heap stayed at 243-316 MB committed and the
+  JVM's peak RSS fell from 995-1207 to 713-763 MB (4-core VM, 10 runs
+  each), with no more CPU per pass. It has no humongous regions, the
+  G1 allocation class that a broken-up 1 GB heap could not place
+  (``link_prediction_capped``'s 128 MB broadcast). The cost is wall
+  time in long sessions: it collects in one thread, so a 178-query
+  ``bench.py`` session, whose caches held up to 587 MB live, paused
+  40-41 s against G1's 18-21 s and ran 6-21 % longer. Unlike a tier-4 flag, a
+  second collector flag is not overridden but fatal ("Multiple garbage
+  collectors selected"), so when any source this launch reads names a
+  collector (``_collector_named``) the flag is left out and the user's
+  collector runs. The tier-4 flags stay.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
+import pyspark
 from pyspark.sql import SparkSession
 
 # HotSpot's four tier-4 (C2) compile thresholds, 10x the JDK 17
@@ -44,6 +64,21 @@ _JIT_POLICY = (
     "-XX:Tier4CompileThreshold=150000",
     "-XX:Tier4BackEdgeThreshold=400000",
 )
+# the one local JVM's collector (module docstring)
+_SERIAL_GC = "-XX:+UseSerialGC"
+# -XX:+UseG1GC, -XX:-UseParallelGC, ... A text match, so it also hits
+# comments and a few non-collector flags (UseMaximumCompactionOnSystemGC):
+# it errs toward leaving the collector to HotSpot or the user.
+_NAMES_COLLECTOR = re.compile(r"-XX:[+-]Use\w*GC\b")
+# the environment variables whose JVM options reach the driver JVM
+_JAVA_OPTION_VARS = ("SPARK_SUBMIT_OPTS", "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS")
+
+
+def _conf_dir() -> str:
+    """Spark's conf directory: $SPARK_CONF_DIR, else $SPARK_HOME/conf,
+    else the conf directory of the installed pyspark."""
+    home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    return os.environ.get("SPARK_CONF_DIR") or os.path.join(home, "conf")
 
 
 def _defaults_conf_has_master() -> bool:
@@ -56,19 +91,8 @@ def _defaults_conf_has_master() -> bool:
     spark-defaults.conf with local[N]. Java-properties format: the key
     is the first whitespace-/'='-/':'-delimited token of a non-comment
     line."""
-    conf_dir = os.environ.get("SPARK_CONF_DIR")
-    if not conf_dir:
-        home = os.environ.get("SPARK_HOME")
-        if not home:
-            try:
-                import pyspark
-
-                home = os.path.dirname(pyspark.__file__)
-            except ImportError:  # pragma: no cover
-                return False
-        conf_dir = os.path.join(home, "conf")
     try:
-        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+        with open(os.path.join(_conf_dir(), "spark-defaults.conf")) as f:
             for line in f:
                 line = line.strip()
                 if not line or line.startswith(("#", "!")):
@@ -79,6 +103,26 @@ def _defaults_conf_has_master() -> bool:
     except OSError:
         return False
     return False
+
+
+def _collector_named() -> bool:
+    """True when a source the local launch reads names a garbage
+    collector: the environment variables of JVM options, PYSPARK_SUBMIT_ARGS
+    and the ``--properties-file`` it names, and spark-defaults.conf and
+    spark-env.sh in the conf directory. Files are read as text, not as
+    Spark options."""
+    args = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+    texts = [os.environ.get(v, "") for v in _JAVA_OPTION_VARS] + [args]
+    paths = re.findall(r"--properties-file(?:=|\s+)(\S+)", args) + [
+        os.path.join(_conf_dir(), f) for f in ("spark-defaults.conf", "spark-env.sh")
+    ]
+    for path in paths:
+        try:
+            with open(path.strip("'\""), errors="replace") as f:
+                texts.append(f.read())
+        except OSError:
+            pass
+    return any(_NAMES_COLLECTOR.search(t) for t in texts)
 
 
 def get_spark(
@@ -172,12 +216,14 @@ def get_spark(
             "spark.driver.memory",
             driver_memory or os.environ["SPARK_GRAFT_DRIVER_MEM"],
         )
-    # the JIT policy (module docstring): SPARK_SUBMIT_OPTS reaches only
-    # the driver JVM that getOrCreate launches (none if a gateway is up)
+    # the JIT policy and the collector (module docstring):
+    # SPARK_SUBMIT_OPTS reaches only the driver JVM that getOrCreate
+    # launches (none if a gateway is up)
     submit_opts = os.environ.get("SPARK_SUBMIT_OPTS")
     if not master_given:
+        collector = None if _collector_named() else _SERIAL_GC
         os.environ["SPARK_SUBMIT_OPTS"] = " ".join(
-            filter(None, (*_JIT_POLICY, submit_opts))
+            filter(None, (*_JIT_POLICY, collector, submit_opts))
         )
     try:
         spark = builder.getOrCreate()

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.textops import money_sum, round_half_up
+from ..operators.textops import cents, money_sum, round_half_up
 from ..session_cache import session_cached
 from ..sources.tables import load_table
 from .registry import query
@@ -66,9 +66,9 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_qty"),
             money_sum("l_extendedprice")
             .alias("sum_base_price"),
-            (F.floor(F.sum(F.round(disc * 10000).cast("bigint")) / 100 + 0.5) / 100)
+            (F.floor(F.sum(cents(disc, 4)) / 100 + 0.5) / 100)
             .alias("sum_disc_price"),
-            (F.floor(F.sum(F.round(charge * 1000000).cast("bigint")) / 10000 + 0.5) / 100)
+            (F.floor(F.sum(cents(charge, 6)) / 10000 + 0.5) / 100)
             .alias("sum_charge"),
             round_half_up(F.avg("l_quantity"), 2).alias("avg_qty"),
             round_half_up(F.avg("l_extendedprice"), 2).alias("avg_price"),
@@ -1633,8 +1633,6 @@ def robust_scale_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one nationkey-partitioned window pass (rank + count), a
     25-group agg, and a broadcast join of the 25-row quantile frame
     back onto customers."""
-    from ..operators.textops import cents
-
     c = load_table(spark, sf_dir, "customer")
     cb = c.select(
         "c_nationkey", "c_custkey", cents("c_acctbal").alias("cents")
@@ -1730,7 +1728,6 @@ def quantile_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-joins them as range predicates, trading exact
     equal-frequency for a single scan (the approx_percentile query is
     that path's registered twin)."""
-    from ..operators.textops import cents
     from pyspark.sql.window import Window
 
     c = load_table(spark, sf_dir, "customer")

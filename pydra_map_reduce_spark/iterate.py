@@ -3,11 +3,13 @@
 walks, BPE training, IVF k-means, power iteration).
 
 ``for state in checkpointed_rounds(seed, step, rounds)`` yields, for
-``r = 1..rounds``, ``step(prev, r).localCheckpoint(eager=True)``, where
-``prev`` is the seed in round 1 and the previous round after that. The
-eager ``localCheckpoint`` materializes each round and cuts its lineage:
-without the cut every round's plan nests all earlier rounds, and
-Catalyst planning time grows super-linearly with the round count.
+``r = 1..rounds``, ``materialize(step(prev, r), SMALL)``, where ``prev``
+is the seed in round 1 and the previous round after that. Every round
+state is therefore ``SMALL`` (``session_cache``'s size classes): it is
+computed once and its lineage is cut. Without the cut every round's
+plan nests all earlier rounds, and Catalyst planning time grows
+super-linearly with the round count. A state that grows with the
+corpus does not belong in this loop.
 
 Release contract (``session_cache.release``):
 
@@ -37,7 +39,7 @@ from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame
 
-from .session_cache import release
+from .session_cache import SMALL, materialize, release
 
 
 def checkpointed_rounds(
@@ -51,7 +53,7 @@ def checkpointed_rounds(
     prev = seed
     try:
         for r in range(1, rounds + 1):
-            state = step(prev, r).localCheckpoint(eager=True)
+            state = materialize(step(prev, r), SMALL)
             yield state
             if prev is not seed:
                 release(prev)

@@ -9,9 +9,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..iterate import checkpointed_rounds
+from ..session_cache import CORPUS, materialize
 
 # MinHash family h_i(x) = (a_i*x + b_i) mod p over 32-bit shingle ids.
 _P = 4_294_967_311  # smallest prime > 2^32
@@ -205,7 +205,7 @@ def _capped_pair_counts(
     default lifecycle is persist-without-unpersist ON PURPOSE: Spark's
     CacheManager keys cache entries by CANONICALIZED plan, so the five
     registry consumers of the (n=3, max_df=100) index over the same
-    fixture share ONE evictable MEMORY_AND_DISK entry, not one per
+    fixture share ONE evictable entry, not one per
     invocation — measured r10: eagerly checkpointing each result and
     unpersisting here cost the warm near-dup family ~3x
     (containment_neardup 0.64→2.10 s, dedup_cluster_stats 2.71→4.59 s,
@@ -218,12 +218,10 @@ def _capped_pair_counts(
     if max_df is not None:
         dfreq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
         ex = ex.join(dfreq.filter(F.col("df") <= max_df), "s").select("doc_id", "s")
-    # persist: the (capped) shingle index feeds three plan branches
-    # (both join sides + sizes); without it each branch recomputes the
-    # full tokenize→window→distinct lineage. MEMORY_AND_DISK entries
-    # are evictable (unified memory manager favors execution), so a
-    # long-lived session degrades to recompute, not OOM.
-    ex = ex.persist(StorageLevel.MEMORY_AND_DISK)
+    # the (capped) shingle index feeds three plan branches (both join
+    # sides + sizes); without it each branch recomputes the full
+    # tokenize→window→distinct lineage.
+    ex = materialize(ex, CORPUS)
     sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).cast("int").alias("n"))
     a, b = ex.alias("a"), ex.alias("b")
     inter = (
@@ -467,7 +465,7 @@ def minhash_lsh_pairs(
         sh_rows = portable_shingle_ids(df, id_col, text_col, shingle_n)
     else:
         sh_rows = shingle_rows(df, id_col, text_col, shingle_n)
-    sh_rows = sh_rows.persist(StorageLevel.MEMORY_AND_DISK)
+    sh_rows = materialize(sh_rows, CORPUS)
     sigs = minhash_signatures(sh_rows, n_hashes)
     cand = minhash_band_candidates(sigs, n_hashes, bands)
     from .textops import round_half_up  # deferred: circular with textops
@@ -481,16 +479,15 @@ def minhash_lsh_pairs(
     # heaviest shuffle to candidate docs, honoring the module's
     # only-candidates-are-rescored design rule
     # cand is read twice now (the doc prefilter + the final pair
-    # join): checkpoint the NARROW pair frame so the heavy
+    # join): materialize the NARROW pair frame so the heavy
     # signature->banding lineage behind it computes exactly once
-    # (unpinned, the prefilter re-ran it and quintupled the query;
-    # measured best of persist-lazy vs eager checkpoint). Fixture-
-    # scale honesty: the prefilter still costs ~1.9x here BECAUSE the
+    # (unpinned, the prefilter re-ran it and quintupled the query).
+    # Fixture-scale honesty: the prefilter still costs ~1.9x here BECAUSE the
     # toy corpus's candidate set covers most documents — no pruning
     # can pay off; at 10^9 docs with ~1e6 candidate pairs it is the
     # difference between a corpus-wide collect_set of document-width
     # arrays and a bounded one, i.e. the module's design rule.
-    cand = cand.localCheckpoint(eager=True)
+    cand = materialize(cand, CORPUS)
     cand_docs = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .union(cand.select(F.col("doc_b").alias("doc_id")))
@@ -739,11 +736,11 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
     and a 14-round chain stalls planning) and the loop stops early
     when a round changes nothing (checked via a cheap count, the only
     driver-side value)."""
-    edges = (
+    edges = materialize(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        CORPUS,
     )
 
     def _propagate(labels: DataFrame, _r: int) -> DataFrame:

@@ -12,9 +12,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..iterate import checkpointed_rounds
+from ..session_cache import CORPUS, materialize, release
 
 
 def pagerank(
@@ -51,19 +51,19 @@ def pagerank(
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # edges annotated with the source's out-degree: persisted once,
     # reused by all rounds (the loop-invariant side)
-    ed = e.join(out_deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = (
+    ed = materialize(e.join(out_deg, "src"), CORPUS)
+    nodes = materialize(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        CORPUS,
     )
     # the dangling node SET (no out-edges) is loop-invariant: compute
     # and persist it once — deriving it from out_deg inside the loop
     # would replay the edge scan + distinct + degree agg every round
-    dangling_nodes = nodes.join(
-        out_deg, nodes.node == out_deg.src, "left_anti"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    dangling_nodes = materialize(
+        nodes.join(out_deg, nodes.node == out_deg.src, "left_anti"), CORPUS
+    )
 
     # the try must open BEFORE the first materializing action — the
     # count and the first round below are the jobs that populate the
@@ -101,10 +101,7 @@ def pagerank(
             pass
     finally:
         # unpersist on EVERY exit: a mid-loop failure (task
-        # error, interrupt) would otherwise pin three
-        # MEMORY_AND_DISK frames in the long-lived shared
-        # session for its lifetime
-        ed.unpersist()
-        nodes.unpersist()
-        dangling_nodes.unpersist()
+        # error, interrupt) would otherwise pin three frames in
+        # the long-lived shared session for its lifetime
+        release((ed, nodes, dangling_nodes))
     return ranks

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..iterate import checkpointed_rounds
+from ..session_cache import CORPUS, SMALL, materialize
 from .textops import (
     round_half_up,
     signed_round_half_up,
@@ -546,13 +547,13 @@ def ivf_train_distributed(
     dim: int,
     n_clusters: int = 64,
     lloyd_iters: int = 2,
-    materialize: bool = False,
+    pin: bool = False,
 ) -> IvfIndex:
     """Train the distributed-centroid IVF index — the large-k ceiling
     lift for `ivf_topk`, whose driver-synced centroid matrix stops
     scaling when n_clusters·dim is large (documented there).
-    ``materialize=True`` pins the index executor-side (corpus
-    projection persisted, assignment localCheckpoint'd eagerly) so
+    ``pin=True`` pins the index executor-side (corpus projection
+    ``CORPUS``, assignment ``SMALL``) so
     subsequent serves touch no training lineage at all.
 
     Centroids live in a DataFrame for the entire run; nothing
@@ -604,11 +605,11 @@ def ivf_train_distributed(
     flat = e.selectExpr(
         "vec_id", *[f"element_at(emb, {i + 1}) AS v{i}" for i in range(dim)]
     )
-    if materialize:
+    if pin:
         # serve-many: the flat projection is read by every Lloyd round,
         # the final assignment, AND every future serve's rescore —
         # persist it before the first action so one scan feeds them all
-        flat = flat.persist()
+        flat = materialize(flat, CORPUS)
 
     # deterministic seeds: the n_clusters lowest-id vectors, cid 0..n-1
     # (single-partition window is safe: the frame is limit()-bounded)
@@ -669,12 +670,12 @@ def ivf_train_distributed(
     for cents in checkpointed_rounds(cents, lloyd, lloyd_iters):
         pass
     assigned = assign(cents)
-    if materialize:
+    if pin:
         # cut ALL training lineage: the inverted lists become
         # executor-side state (eager localCheckpoint runs the final
         # assignment now — and, flowing through `flat`, fills its
         # cache), so serves replay probe + rescore only
-        assigned = assigned.localCheckpoint(eager=True)
+        assigned = materialize(assigned, SMALL)
     return IvfIndex(
         flat=flat, cents=cents, assigned=assigned, dim=dim, n_clusters=n_clusters
     )
@@ -845,7 +846,7 @@ def ivf_topk_distributed(
     """Train + serve in one call — the oracle-parity form (the
     unrolled-Lloyd SQL oracle recomputes training every run, so this
     entry point does too). Production / bench serving goes through
-    ``ivf_train_distributed(materialize=True)`` once and
+    ``ivf_train_distributed(pin=True)`` once and
     ``ivf_serve_distributed`` per query."""
     index = ivf_train_distributed(
         df, id_col, vec_col, dim=dim, n_clusters=n_clusters,
@@ -894,7 +895,7 @@ def semantic_dedup(
     # A caller-supplied trained index (e.g. the session's ANN serving
     # index) makes dedup a pure probe workload — the SemDeDup paper's
     # own shape, where ONE clustering serves both search and dedup.
-    # Otherwise train here with materialize: the flat projection feeds
+    # Otherwise train here with pin: the flat projection feeds
     # every Lloyd round, BOTH sides of the in-cell self-join, and the
     # final aggregate — the persisted corpus scans once instead of
     # five times (Spark's cache manager dedups repeated calls by
@@ -912,7 +913,7 @@ def semantic_dedup(
     if index is None:
         index = ivf_train_distributed(
             df, id_col, vec_col, dim=dim, n_clusters=n_clusters,
-            lloyd_iters=lloyd_iters, materialize=True,
+            lloyd_iters=lloyd_iters, pin=True,
         )
     elif index.dim != dim:
         # a supplied index REPLACES df/id_col/vec_col (dedup runs over

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.textops import cents, e4_revenue_2dp, e4_revenue_2dp_sql, money_sum, round_half_up
+from ..session_cache import SMALL, materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -675,8 +676,8 @@ def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     mutual_information precedent). The classic 'is language mix
     uniform across sources' health check."""
     d = load_table(spark, sf_dir, "documents")
-    o = d.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("n")).localCheckpoint(
-        eager=True
+    o = materialize(
+        d.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("n")), SMALL
     )
     rt = o.groupBy("lang").agg(F.sum("n").alias("n_l"))
     ct = o.groupBy("source").agg(F.sum("n").alias("n_c"))

@@ -32,6 +32,7 @@ from ..operators.textops import (
     round_half_up,
     signed_round_half_up,
 )
+from ..session_cache import CONSIST, SMALL, materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -1205,10 +1206,10 @@ def dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured: 4 parquet scans without the checkpoint, 1 with). The
     # pinned frame is narrow and bucket-bounded (≤ 64 rows per doc vs
     # the full bigram stream), the bpe_merges vocab precedent.
-    doc_bucket = (
+    doc_bucket = materialize(
         bg.groupBy("doc_id", "source", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        SMALL,
     )
     tgt = (
         doc_bucket.filter(F.col("source") == _DSIR_TARGET)
@@ -1381,8 +1382,8 @@ def stable_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     # disabled, independently re-sampled boundaries would make offsets
     # describe different partitions than the ranks came from). The pin
     # makes both consumers read the same materialized partitioning.
-    local = parted.withColumn("lrank", F.row_number().over(wlocal)).localCheckpoint(
-        eager=True
+    local = materialize(
+        parted.withColumn("lrank", F.row_number().over(wlocal)), CONSIST
     )
     counts = local.groupBy("pid").agg(F.count(F.lit(1)).alias("n"))
     woff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as ops
 from ..operators.textops import round_half_up, signed_round_half_up
-from ..session_cache import session_cached
+from ..session_cache import CORPUS, SMALL, materialize, session_cached
 from ..sources.tables import load_table
 from .registry import query
 
@@ -333,8 +333,6 @@ def minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _xxhash_sigs_cand(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    from pyspark.storagelevel import StorageLevel
-
     from ..operators.dedup import (
         _spread,
         minhash_band_candidates,
@@ -346,13 +344,9 @@ def _xxhash_sigs_cand(
     # EXACT plan twin of minhash_lsh_pairs' internal sh_rows (same
     # _spread, same defaults) — the .persist here and the operator's
     # dedup to one CacheManager entry
-    sh = shingle_rows(_spread(d), "doc_id", "text").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sigs = minhash_signatures(sh, 32).persist(StorageLevel.MEMORY_AND_DISK)
-    cand = minhash_band_candidates(sigs, 32, 8).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = materialize(shingle_rows(_spread(d), "doc_id", "text"), CORPUS)
+    sigs = materialize(minhash_signatures(sh, 32), CORPUS)
+    cand = materialize(minhash_band_candidates(sigs, 32, 8), CORPUS)
     return sh, sigs, cand
 
 
@@ -706,22 +700,17 @@ _LSH_EVAL_THRESHOLD = 0.05  # deliberately BELOW the banding design point
 # index (portable_shingle_ids over the spread corpus) and each paid the
 # full ~3.5 s (sf0.1) build per call because the per-call persist/
 # unpersist pair released exactly what the next evaluator was about to
-# rebuild. Storage is MEMORY_AND_DISK so an idle session degrades to
-# recompute, not OOM. (The xxhash64 PRODUCTION path is untouched — its
+# rebuild. (The xxhash64 PRODUCTION path is untouched — its
 # index plan differs, so CacheManager sharing never applied across the
 # two families.)
 @session_cached("documents")
 def _portable_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
     from ..operators.dedup import _spread, portable_shingle_ids
 
     d = load_table(spark, sf_dir, "documents")
     # _spread: without it the pre-shuffle shingling can run
     # single-partition (the sibling operators' measured 6 s vs 0.3 s)
-    return portable_shingle_ids(_spread(d), "doc_id", "text").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    return materialize(portable_shingle_ids(_spread(d), "doc_id", "text"), CORPUS)
 
 
 # Session-cached (signatures, band-candidates) for the 32-hash/8-band
@@ -741,26 +730,22 @@ def _portable_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _portable_sigs_cand(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    from pyspark.storagelevel import StorageLevel
-
     from ..operators.dedup import (
         minhash_band_candidates,
         minhash_signatures,
     )
 
     sh = _portable_shingle_index(spark, sf_dir)
-    # MEMORY_AND_DISK, measured against DISK_ONLY on an idle host:
-    # the family (recall/bbit/estimate/neardup/band_sweep) summed
-    # 13.8 s warm vs 18.1 s with DISK_ONLY, and both frames are
+    # ``CORPUS``, not ``WIDE``, measured on an idle host: the family
+    # (recall/bbit/estimate/neardup/band_sweep) summed 13.8 s warm
+    # vs 18.1 s on disk only, and both frames are
     # model-sized (~10 MB at sf0.1: |docs|×32 longs + the distinct
     # candidate pairs), far too small to pressure the storage pool.
     # (A full-bench run that seemed to show M&D evicting other
     # queries' caches turned out to be leftover host load — its
     # 5-min loadavg was 3.0 at start; the rerun at 0.3 was flat.)
-    sigs = minhash_signatures(sh, 32).persist(StorageLevel.MEMORY_AND_DISK)
-    cand = minhash_band_candidates(sigs, 32, 8).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sigs = materialize(minhash_signatures(sh, 32), CORPUS)
+    cand = materialize(minhash_band_candidates(sigs, 32, 8), CORPUS)
     return sigs, cand
 
 
@@ -870,18 +855,15 @@ def lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the index stays persisted (session cache — see
     # _portable_shingle_index); the one-row report still checkpoints
     # so the wide truth lineage isn't replayed by downstream readers
-    return (
-        counts.select(
-            F.col("n_true").cast("bigint").alias("n_true"),
-            F.col("n_found").cast("bigint").alias("n_found"),
-            F.col("n_hits").cast("bigint").alias("n_hits"),
-            (F.col("n_true") - F.col("n_hits")).cast("bigint").alias("n_missed"),
-            round_half_up(
-                F.col("n_hits") * 1.0 / F.col("n_true"), 4
-            ).alias("recall"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    return materialize(counts.select(
+        F.col("n_true").cast("bigint").alias("n_true"),
+        F.col("n_found").cast("bigint").alias("n_found"),
+        F.col("n_hits").cast("bigint").alias("n_hits"),
+        (F.col("n_true") - F.col("n_hits")).cast("bigint").alias("n_missed"),
+        round_half_up(
+            F.col("n_hits") * 1.0 / F.col("n_true"), 4
+        ).alias("recall"),
+    ), SMALL)
 
 
 @query(
@@ -993,7 +975,6 @@ def _dup_window_frames(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     the first's materialization instead of re-running the windowed
     gram pass — the _capped_pair_counts lifecycle rationale, same
     bounded, evictable pinning."""
-    from pyspark.storagelevel import StorageLevel
     from pyspark.sql.window import Window
 
     toks = d.select(
@@ -1021,10 +1002,10 @@ def _dup_window_frames(d: DataFrame) -> tuple[DataFrame, DataFrame]:
         .filter(F.col("nd") >= 2)
         .select("s")
     )
-    dp = (
+    dp = materialize(
         gid.join(dup, "s", "left_semi")
-        .select("doc_id", "pos")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("doc_id", "pos"),
+        CORPUS,
     )
     return toks, dp
 
@@ -1202,21 +1183,20 @@ def span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (minhash_lsh_portable, dedup_clusters, dedup_clusters_star,
 # dedup_clusters_minhash), and before round 13 each rebuilt the
 # signatures -> banding -> rescore chain per call (~1.3-1.9 s warm at
-# sf0.1 beyond the shared shingle frame). The entry is the
-# localCheckpointed FINAL pair frame (narrow: two ids + jaccard,
-# ~100s of rows at fixture SFs, pair-graph-sized at any scale), so a
-# hit costs one block read. The oracles still rebuild the full
-# pipeline from scratch every call, so the differential keeps
+# sf0.1 beyond the shared shingle frame). The entry is the FINAL pair
+# frame (narrow: two ids + jaccard, ~100s of rows at fixture SFs,
+# pair-graph-sized at any scale, so ``CORPUS``). The oracles still
+# rebuild the full pipeline from scratch every call, so the differential keeps
 # certifying the MACHINERY, not the cache.
 @session_cached("documents")
 def _minhash_portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-pin the shared portable sigs/cand (see lsh_recall note)
     _portable_sigs_cand(spark, sf_dir)
-    return ops.minhash_lsh_pairs(
+    return materialize(ops.minhash_lsh_pairs(
         load_table(spark, sf_dir, "documents"),
         "doc_id", "text", n_hashes=32, bands=8,
         threshold=0.8, portable_hash=True,
-    ).localCheckpoint(eager=True)
+    ), CORPUS)
 
 
 # Labels of the iterative min-label CC over the cached portable pair
@@ -1401,11 +1381,7 @@ def _winnow_selection(d: DataFrame) -> DataFrame:
 # before r14.
 @session_cached("documents")
 def _winnow_selection_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
-    return _winnow_selection(
-        load_table(spark, sf_dir, "documents")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    return materialize(_winnow_selection(load_table(spark, sf_dir, "documents")), CORPUS)
 
 
 @query(
@@ -1653,7 +1629,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     ni = F.coalesce(F.col("n_inter"), F.lit(0))
     j_true_raw = ni.cast("double") / (F.col("na") + F.col("nb") - ni)
     j_est_raw = F.col("n_agree") / 32.0
-    out = (
+    out = materialize(
         agree.join(inter, ["doc_a", "doc_b"], "left")
         .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
         .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
@@ -1664,8 +1640,8 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_half_up(j_est_raw, 6).alias("j_est"),
             round_half_up(j_true_raw, 6).alias("j_true"),
             round_half_up(F.abs(j_est_raw - j_true_raw), 6).alias("abs_err"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        SMALL,
     )
     return out
 
@@ -1833,10 +1809,10 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grows superlinearly with corpus size, so a broadcast hint here
     # could exceed executor/driver memory at larger SFs even under
     # the documented sample-the-corpus posture.
-    cand = (
+    cand = materialize(
         minhash_band_candidates(minhash_signatures(sh, 32), 32, _SWEEP_BANDS)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+        .select("doc_a", "doc_b"),
+        CORPUS,
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
@@ -1988,7 +1964,7 @@ def span_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             for wd in widths
         ]
     )
-    gid = (
+    gid = materialize(
         led.select("doc_id", "pos", F.explode(wg).alias("wg"))
         .filter(F.col("wg").isNotNull())
         .select(
@@ -1998,13 +1974,13 @@ def span_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.conv(F.substring(F.md5("wg.g"), 1, 8), 16, 10)
             .cast("bigint")
             .alias("s"),
-        )
+        ),
         # materialized ONCE: gid feeds both the duplicated-gram
         # derivation and the semi-join back, and without this the
         # 4-width explode + md5 pass executes twice (measured
         # 4.8 → 2.8 s warm at sf0.1; the narrow frame is 4 small
         # columns per window position)
-        .localCheckpoint(eager=True)
+        CORPUS,
     )
     # "seen in ≥2 distinct docs" as min(doc_id) != max(doc_id): a plain
     # hash agg with two long partials instead of count(DISTINCT ...)'s
@@ -2437,7 +2413,7 @@ def bbit_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     j_true_raw = ni.cast("double") / (F.col("na") + F.col("nb") - ni)
     j_1bit_raw = 2.0 * F.col("n_agree_1bit") / 32.0 - 1.0
     j_full_raw = F.col("n_agree") / 32.0
-    return (
+    return materialize(
         agree.join(inter, ["doc_a", "doc_b"], "left")
         .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
         .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
@@ -2449,8 +2425,8 @@ def bbit_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_half_up(j_full_raw, 6).alias("j_full"),
             round_half_up(j_true_raw, 6).alias("j_true"),
             round_half_up(F.abs(j_1bit_raw - j_true_raw), 6).alias("abs_err_1bit"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        SMALL,
     )
 
 

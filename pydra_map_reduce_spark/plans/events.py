@@ -14,6 +14,7 @@ from pyspark.sql.window import Window
 
 from ..operators import sessions as sessions_ops
 from ..operators.textops import cents, cents_sql, round_half_up
+from ..session_cache import CORPUS, materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -220,7 +221,7 @@ def behavior_profile_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     order); find the 5 users most cosine-similar to user 0. Sparse
     profiles join on the transition key — no dense vectors, no n² —
     so the same plan serves millions of users: the profile build is
-    CHECKPOINTED, making it genuinely one window pass + one keyed agg
+    materialized once, making it genuinely one window pass + one keyed agg
     (norms/qprof/qnorm/dots reference it four times, and the pushed
     user_id filters de-canonicalize the subtrees so Spark reuses
     nothing — the unpersisted form executed 4 full scans + 4 window
@@ -239,9 +240,9 @@ def behavior_profile_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("transition").isNotNull())
     )
-    prof = big.groupBy("user_id", "transition").agg(
+    prof = materialize(big.groupBy("user_id", "transition").agg(
         F.count(F.lit(1)).cast("double").alias("n")
-    ).localCheckpoint(eager=True)
+    ), CORPUS)
     norms = prof.groupBy("user_id").agg(F.sqrt(F.sum(F.col("n") * F.col("n"))).alias("nrm"))
     qprof = prof.filter(F.col("user_id") == 0).select("transition", F.col("n").alias("qn"))
     qnorm = norms.filter(F.col("user_id") == 0).select(F.col("nrm").alias("qnrm"))
@@ -507,21 +508,17 @@ def time_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing and the result is bit-identical in any engine at any
     partitioning.
 
-    The minute grain is persisted: the three report branches would
+    The minute grain is ``CORPUS``: the three report branches would
     otherwise each recompute it from the raw scan (Spark does not
     dedupe common subplans across a union) — with the cache the plan
     reads parquet ONCE and every coarser grain aggregates in-memory
-    partials. MEMORY_AND_DISK entries are evictable, so a long-lived
-    session degrades to recompute, not OOM (same posture as the
-    dedup shingle index). Repeated invocations do NOT stack cache
+    partials. Repeated invocations do NOT stack cache
     entries: Spark's CacheManager keys on the canonicalized plan, so
     every call with the same sf_dir resolves to the one existing
     entry (measured: 1 cached RDD after 3 calls); only distinct
     sf_dirs add entries, bounded by the fixture set."""
-    from pyspark.storagelevel import StorageLevel
-
     e = load_table(spark, sf_dir, "events")
-    minute = e.groupBy(
+    minute = materialize(e.groupBy(
         F.date_trunc("minute", "ts").alias("bucket_start"), "event_type"
     ).agg(
         F.count(F.lit(1)).alias("n"),
@@ -529,9 +526,7 @@ def time_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and the re-aggregation is bigint addition — no float
         # accumulation anywhere in the chain (_cent_sum rationale)
         F.sum(_cents()).alias("sv_c"),
-    ).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    ), CORPUS)
     hour = minute.groupBy(
         F.date_trunc("hour", "bucket_start").alias("bucket_start"), "event_type"
     ).agg(F.sum("n").cast("bigint").alias("n"), F.sum("sv_c").cast("bigint").alias("sv_c"))

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..iterate import checkpointed_rounds
 from ..operators import graph as graph_ops
-from ..session_cache import release, session_cached
+from ..session_cache import CORPUS, SMALL, WIDE, materialize, release, session_cached
 from ..sources.tables import load_table
 from .registry import query
 
@@ -95,14 +95,11 @@ def _supplier_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pair-graph discipline, r13): 5 supplier↔part consumers (pagerank,
 # bfs_hops, lpa_communities, kcore_decompose, random_walks) and 2
 # co-purchase consumers (triangle_count, link_prediction_capped) each
-# rebuilt the lineitem scan + self-join + distinct per call. The
-# cached frame is DISK_ONLY (corpus-scaling, the apriori heap rule).
+# rebuilt the lineitem scan + self-join + distinct per call.
 # The oracles always rebuild — the differentials keep certifying the
 # machinery, not the cache.
 @session_cached("lineitem")
 def _sp_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
     # Hash-partitioned by src BEFORE the persist (guide §2.4: two
     # operations keyed the same way share one exchange): every
     # iterative consumer aggregates per-round on the src side —
@@ -115,11 +112,7 @@ def _sp_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form (no explicit N) keeps the partition count at
     # spark.sql.shuffle.partitions locally and AQE-coalescible,
     # i.e. scale-adaptive rather than tuned to either tier.
-    e = (
-        _supplier_part_edges(spark, sf_dir)
-        .repartition("src")
-        .persist(StorageLevel.DISK_ONLY)
-    )
+    e = materialize(_supplier_part_edges(spark, sf_dir).repartition("src"), WIDE)
     # materialize NOW: until the cached AQE plan is final, its
     # outputPartitioning reads as unknown and the first consumer
     # round plans with the very exchanges the repartition exists
@@ -132,8 +125,6 @@ def _sp_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 @session_cached("lineitem")
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (u < v) distinct co-purchase part-pair edges."""
-    from pyspark.storagelevel import StorageLevel
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -157,11 +148,11 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return (
+    return materialize(
         parts.select(F.explode(pair_arrays).alias("p"))
         .select("p.u", "p.v")
-        .distinct()
-        .persist(StorageLevel.DISK_ONLY)
+        .distinct(),
+        WIDE,
     )
 
 
@@ -223,10 +214,9 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-degree hubs sit on the narrow side of every wedge; the edge
     list is persisted once and reused by all three join roles."""
 
-    # session-cached canonical edge frame (DISK_ONLY — the edge list
-    # is corpus-scaling, ~12M rows at the 10x tier, and a heap pin of
-    # it plus the join hash maps below OOM'd even a 4 GB driver at
-    # sf1 in the r14 whole-window sweep)
+    # session-cached canonical edge frame (``WIDE``: ~12M rows at the
+    # 10x tier, and a heap pin of it plus the join hash maps below
+    # OOM'd even a 4 GB driver at sf1 in the r14 whole-window sweep)
     e = _copurchase_edges(spark, sf_dir)
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     # SHUFFLE_HASH, never broadcast: every join side here is the
@@ -243,10 +233,10 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    return (
+    return materialize(
         e.agg(F.count(F.lit(1)).alias("n_edges"))
-        .crossJoin(F.broadcast(tri))
-        .localCheckpoint(eager=True)
+        .crossJoin(F.broadcast(tri)),
+        SMALL,
     )
 
 
@@ -318,14 +308,14 @@ def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         dist = dist.unionByName(frontier).groupBy("node").agg(
             F.min("dist").alias("dist")
         )
-    return (
+    return materialize(
         dist.groupBy(F.col("dist").cast("bigint").alias("dist"))
         .agg(
             F.count(F.lit(1)).alias("n_nodes"),
             F.min("node").alias("first_node"),
             F.max("node").alias("last_node"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        SMALL,
     )
 
 
@@ -402,9 +392,7 @@ def recursive_cte_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_name, edge_name = f"events_rec_{tag}", f"edges_rec_{tag}"
     load_table(spark, sf_dir, "events").createOrReplaceTempView(ev_name)
     try:
-        edges = spark.sql(
-            _REC_EDGES_SQL.format(tbl=ev_name)
-        ).localCheckpoint(eager=True)
+        edges = materialize(spark.sql(_REC_EDGES_SQL.format(tbl=ev_name)), SMALL)
         edges.createOrReplaceTempView(edge_name)
         return spark.sql(_REC_HOPS_SQL.format(edges=edge_name))
     finally:
@@ -475,16 +463,16 @@ def link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_partkey") < 300)
     )
     a, b = li.alias("a"), li.alias("b")
-    e = (
+    e = materialize(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
             & (F.col("a.l_partkey") < F.col("b.l_partkey")),
         )
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)  # consumed by nbr (x2) + the anti-join
-    )
+        .distinct(),
+        CORPUS,
+    )  # consumed by nbr (x2) + the anti-join
     nbr = e.select(F.col("u").alias("node"), F.col("v").alias("nb")).unionAll(
         e.select(F.col("v").alias("node"), F.col("u").alias("nb"))
     )
@@ -631,17 +619,15 @@ def link_prediction_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics on the bounded subgraph). Both measurements are
     asserted in the suite so a semantics change that degrades either
     shape fails loudly. Scale: the edge, adjacency, and capped
-    frames are corpus-sized and persist DISK_ONLY (the apriori heap
-    rule); the adjacency joins are hinted MERGE so no corpus-sized
-    broadcast hash relation can enter the plan at any stats estimate
-    (the r13 broadcast-exchange heap gotcha)."""
+    frames are corpus-sized (``WIDE``); the adjacency joins are hinted
+    MERGE so no corpus-sized broadcast hash relation can enter the plan
+    at any stats estimate (the r13 broadcast-exchange heap gotcha)."""
     from pyspark.sql.window import Window
-    from pyspark.storagelevel import StorageLevel
 
     from ..operators.textops import round_half_up
 
     # session-cached canonical edge frame, consumed by both nbr
-    # directions (DISK_ONLY; shared with triangle_count)
+    # directions (shared with triangle_count)
     e = _copurchase_edges(spark, sf_dir)
     nbr = e.select(
         F.col("u").alias("node"), F.col("v").alias("nb")
@@ -651,10 +637,10 @@ def link_prediction_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it (size), the existing-edge filter derives from it
     # (array_contains), and the exact rescore derives from it
     # (array_intersect) — no second corpus-wide shuffle.
-    adj = (
+    adj = materialize(
         nbr.groupBy("node")
-        .agg(F.sort_array(F.collect_list("nb")).alias("ns"))
-        .persist(StorageLevel.DISK_ONLY)
+        .agg(F.sort_array(F.collect_list("nb")).alias("ns")),
+        WIDE,
     )
     try:
         # Scale-adaptive slice count for the capped-wedge stage
@@ -767,7 +753,7 @@ def link_prediction_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.lit(1.0)
             / (F.col("dxd") + F.col("dyd") - F.col("common"))
         )
-        return (
+        return materialize(
             scored.orderBy(j.desc(), "x", "y")
             .limit(20)
             .select(
@@ -775,10 +761,10 @@ def link_prediction_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "y",
                 F.col("common").cast("bigint").alias("common"),
                 round_half_up(j, 4).alias("jaccard"),
-            )
+            ),
             # 20 rows — pin the result so the corpus-sized
             # frames below can be released before returning
-            .localCheckpoint(eager=True)
+            SMALL,
         )
     finally:
         adj.unpersist()
@@ -894,12 +880,12 @@ def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for labels in checkpointed_rounds(labels, propagate, _LPA_ROUNDS):
         pass
-    top = (
+    top = materialize(
         labels.groupBy(F.col("lbl").alias("community"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
         .orderBy(F.col("n_nodes").desc(), "community")
-        .limit(20)
-        .localCheckpoint(eager=True)
+        .limit(20),
+        SMALL,
     )
     release(labels)
     return top
@@ -1061,18 +1047,16 @@ def random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 20 most-visited nodes with visit counts across all walk
     steps — a Σ-over-walks reduction that certifies every step's
     transition choice (one wrong pick anywhere shifts a count).
-    Scale: the adjacency-array frame is corpus-scaling and pinned
-    DISK_ONLY for the step loop (released before return); the walk
+    Scale: the adjacency-array frame is ``WIDE`` for the step loop
+    (released before return); the walk
     frontier (one row per walk) carries the broadcast hint — bounded
     by the chosen walk count, the bfs reached-set rule — so the
     array frame is always the streamed probe side."""
-    from pyspark.storagelevel import StorageLevel
-
     edges = _sp_edges_cached(spark, sf_dir)
-    adj = (
+    adj = materialize(
         edges.groupBy("src")
-        .agg(F.sort_array(F.collect_list("dst")).alias("ns"))
-        .persist(StorageLevel.DISK_ONLY)
+        .agg(F.sort_array(F.collect_list("dst")).alias("ns")),
+        WIDE,
     )
 
     def walk(walks: DataFrame, t: int) -> DataFrame:
@@ -1103,13 +1087,13 @@ def random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for walks in checkpointed_rounds(walks, walk, _RW_STEPS):
             pass
-        top = (
+        top = materialize(
             walks.select(F.explode("visited").alias("node"))
             .groupBy("node")
             .agg(F.count(F.lit(1)).cast("bigint").alias("visits"))
             .orderBy(F.col("visits").desc(), "node")
-            .limit(20)
-            .localCheckpoint(eager=True)
+            .limit(20),
+            SMALL,
         )
         release(walks)
         return top

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.textops import round_half_up, signed_round_half_up
+from ..session_cache import SMALL, materialize
 from ..sources.tables import load_table
 from .registry import query
 from .setops import SCD2_MOD, SCD2_PREFIX, scd2_dim
@@ -1106,10 +1107,10 @@ def blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.levenshtein(F.col("a.p_name"), F.col("b.p_name")) <= 4)
         .select(same_block.alias("blocked"))
     )
-    tstats = truth.agg(
+    tstats = materialize(truth.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_truth"),
         F.sum(F.col("blocked").cast("int")).cast("bigint").alias("n_found"),
-    ).localCheckpoint(eager=True)
+    ), SMALL)
     # Fail loud on an empty truth set (the bpe exhaustion-guard
     # pattern, r12 advice): with zero sampled true matches both engines
     # would agree on a NULL pair_completeness and the differential

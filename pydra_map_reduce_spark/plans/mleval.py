@@ -20,7 +20,7 @@ from ..operators.textops import (
     round_half_up,
     signed_round_half_up,
 )
-from ..session_cache import session_cached
+from ..session_cache import CORPUS, SMALL, materialize, session_cached
 from ..sources.tables import load_table
 from .registry import query
 
@@ -476,24 +476,20 @@ def _linear_scored(d: DataFrame) -> DataFrame:
 # narrow (a few MB at sf0.1).
 @session_cached("documents")
 def _gopher_flags_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
     from ..operators.dedup import _spread
 
-    return _gopher_flags(
-        _spread(load_table(spark, sf_dir, "documents"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    return materialize(
+        _gopher_flags(_spread(load_table(spark, sf_dir, "documents"))), CORPUS
+    )
 
 
 @session_cached("documents")
 def _linear_scored_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
     from ..operators.dedup import _spread
 
-    return _linear_scored(
-        _spread(load_table(spark, sf_dir, "documents"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    return materialize(
+        _linear_scored(_spread(load_table(spark, sf_dir, "documents"))), CORPUS
+    )
 
 
 @query(
@@ -943,9 +939,8 @@ def _langid_oracle(iters: int, eta: float, dim: int) -> str:
 # price — still run in full on every call; only the feature
 # extraction is shared, exactly like the r14 _gopher_flags /
 # _linear_scored caches that already feed quality_classifier_gate's
-# labels. Frames stay localCheckpoint(eager): every GD round builds a
-# new plan atop them, and re-analyzing the trigram-build lineage per
-# round measured more expensive than the rounds themselves (r13).
+# labels. The frames grow with the corpus, so they are ``CORPUS``: a
+# lost block recomputes instead of failing the trainer.
 @session_cached("documents")
 def _langid_features(
     spark: SparkSession, sf_dir: str
@@ -975,7 +970,7 @@ def _langid_features(
         F.count(F.lit(1)).alias("c")
     )
     tot = cnt.groupBy("doc_id").agg(F.sum("c").alias("tot"))
-    px = (
+    px = materialize(
         cnt.join(tot, "doc_id")
         .select(
             "doc_id",
@@ -984,10 +979,10 @@ def _langid_features(
         )
         .unionAll(
             d.select("doc_id", F.lit(0).alias("j"), F.lit(1.0).alias("x"))
-        )
-        .localCheckpoint(eager=True)
+        ),
+        CORPUS,
     )
-    yl = d.select("doc_id", "lang", "y").localCheckpoint(eager=True)
+    yl = materialize(d.select("doc_id", "lang", "y"), CORPUS)
     return px, yl
 
 
@@ -999,22 +994,18 @@ def _qcg_features(
 
     dim = _QCG_DIM
     d = _spread(load_table(spark, sf_dir, "documents"))
-    lab = (
-        _gopher_flags_cached(spark, sf_dir)
-        .select(
-            "doc_id",
-            "source",
-            (
-                F.col("ok_nwords")
-                * F.col("ok_meanlen")
-                * F.col("ok_maxlen")
-                * F.col("ok_stop")
-            )
-            .cast("double")
-            .alias("y"),
+    lab = materialize(_gopher_flags_cached(spark, sf_dir).select(
+        "doc_id",
+        "source",
+        (
+            F.col("ok_nwords")
+            * F.col("ok_meanlen")
+            * F.col("ok_maxlen")
+            * F.col("ok_stop")
         )
-        .localCheckpoint(eager=True)
-    )
+        .cast("double")
+        .alias("y"),
+    ), CORPUS)
     # the SAME explicit-whitespace tokenization the flags used (one
     # definition on the oracle side: qtok unnests the flags' ws lists)
     toks = d.select(
@@ -1025,7 +1016,7 @@ def _qcg_features(
         F.count(F.lit(1)).alias("c")
     )
     tot = cnt.groupBy("doc_id").agg(F.sum("c").alias("tot"))
-    px = (
+    px = materialize(
         cnt.join(tot, "doc_id")
         .select(
             "doc_id",
@@ -1034,8 +1025,8 @@ def _qcg_features(
         )
         .unionAll(
             lab.select("doc_id", F.lit(0).alias("j"), F.lit(1.0).alias("x"))
-        )
-        .localCheckpoint(eager=True)
+        ),
+        CORPUS,
     )
     return px, lab
 
@@ -1075,11 +1066,8 @@ def lang_id_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two measured fixture-scale guards: the corpus is `_spread` before
     the trigram+md5 pass (a one-file fixture otherwise runs that
     CPU-heavy stage single-threaded — the shingling operators' 6 s vs
-    0.3 s trap), and the feature/label frames are localCheckpoint
-    (eager) rather than persist — every GD round builds a new plan
-    atop them, and re-analyzing the full trigram-build lineage per
-    round cost more than the rounds themselves (8.3 → 3.6 s warm at
-    sf0.1 across the two fixes). r15: the feature/label frames come
+    0.3 s trap), and the feature/label frames are materialized once.
+    r15: the feature/label frames come
     from the fixture-keyed `_langid_features` session cache
     (deterministic md5 preprocessing shared across calls; the GD
     rounds — what this diagnostic prices — still run per call), and
@@ -1103,7 +1091,7 @@ def lang_id_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("z"))), 4
         ).alias("p"),
     )
-    return (
+    return materialize(
         pred.groupBy("lang")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1111,8 +1099,8 @@ def lang_id_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_pred_en"),
             round_half_up(F.avg("p"), 4).alias("avg_p_en"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        SMALL,
     )
 
 
@@ -1637,9 +1625,8 @@ def quality_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one tokenize pass feeds both the label flags and the
     hashed features; the (doc, j, x) feature frame and the label
-    frame are localCheckpoint'd once (the measured lang_id_train
-    fix: per-round re-analysis of the tokenize lineage cost more
-    than the GD rounds); each round is two co-partitioned keyed
+    frame are materialized once (the measured lang_id_train fix);
+    each round is two co-partitioned keyed
     passes (broadcast-weight matvec, doc-keyed residual join +
     j-keyed gradient sum); the only driver sync is n. At 100 TB the
     recipe is unchanged — DCLM trains on a sample, scores the full
@@ -1784,7 +1771,7 @@ def platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quality import gd_scores, unrolled_gd
 
     d = _spread(load_table(spark, sf_dir, "documents"))
-    lab = _gopher_flags_cached(spark, sf_dir).select(
+    lab = materialize(_gopher_flags_cached(spark, sf_dir).select(
         "doc_id",
         (
             F.col("ok_nwords")
@@ -1794,14 +1781,14 @@ def platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("double")
         .alias("y"),
-    ).localCheckpoint(eager=True)
+    ), SMALL)
     s = _linear_scored_cached(spark, sf_dir).select("doc_id", "quality")
-    px = (
+    px = materialize(
         s.select("doc_id", F.lit(0).alias("j"), F.lit(1.0).alias("x"))
         .unionAll(
             s.select("doc_id", F.lit(1).alias("j"), F.col("quality").alias("x"))
-        )
-        .localCheckpoint(eager=True)
+        ),
+        SMALL,
     )
     # n must be the row count of the SCORED frame (px is 2 rows/doc of
     # it) because the oracle's pn CTE counts lscored, not the Gopher
@@ -1916,12 +1903,12 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("y"),
     )
     s = _linear_scored_cached(spark, sf_dir).select("doc_id", "quality")
-    ib = (
+    ib = materialize(
         s.join(lab, "doc_id")
         .groupBy(F.floor(F.col("quality") * 100).cast("bigint").alias("bin"))
-        .agg(F.count(F.lit(1)).alias("w"), F.sum("y").alias("ones"))
-        .localCheckpoint(eager=True)  # bin-grid frame, consumed 4x below
-    )
+        .agg(F.count(F.lit(1)).alias("w"), F.sum("y").alias("ones")),
+        SMALL,
+    )  # bin-grid frame, consumed 4x below
     wcum = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     ipb = ib.select(
         "bin", "w", "ones",

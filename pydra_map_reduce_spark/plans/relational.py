@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.textops import cents, money_sum, round_half_up
-from ..session_cache import session_cached
+from ..session_cache import CORPUS, SMALL, WIDE, materialize, session_cached
 from ..sources.tables import load_table
 from .registry import query
 
@@ -1182,9 +1182,7 @@ def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pairs / item counts / the basket total map-side from it.
 @session_cached("lineitem", "part")
 def _brand_sets_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
-    return (
+    return materialize(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .join(
@@ -1195,8 +1193,8 @@ def _brand_sets_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("l_orderkey", F.col("p_brand").alias("item"))
         .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("item")).alias("items"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .agg(F.array_sort(F.collect_set("item")).alias("items")),
+        CORPUS,
     )
 
 
@@ -1318,7 +1316,7 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("lift"), "antecedent", "consequent")
         .limit(20)
     )
-    return out.localCheckpoint(eager=True)
+    return materialize(out, SMALL)
 
 
 @query(
@@ -1748,21 +1746,16 @@ def quantile_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Per-order sorted DISTINCT part arrays of the baskets with ≥2 parts,
-# apriori_triples' one corpus shuffle. DISK_ONLY, not localCheckpoint:
-# the frame is corpus-sized (one row per order), and the apriori
-# heap-pin rule (r13 stress tier) keeps corpus-scaling pins off the
-# heap.
+# apriori_triples' one corpus shuffle: an array row per order.
 @session_cached("lineitem")
 def _basket_part_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
-    return (
+    return materialize(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("items"))
-        .filter(F.size("items") >= 2)
-        .persist(StorageLevel.DISK_ONLY)
+        .filter(F.size("items") >= 2),
+        WIDE,
     )
 
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session_cache import CORPUS, materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -222,7 +223,7 @@ SCD2_PREFIX = "MOVED_"
 
 def scd2_dim(base: DataFrame, *, start, eff, ts_type: str, with_current: bool) -> DataFrame:
     """The synthesized SCD-2 dimension: closed/kept/opened three-way
-    build over ONE checkpointed left join (Catalyst does not dedupe
+    build over ONE materialized left join (Catalyst does not dedupe
     common subplans across a union — unpersisted, the join
     instantiated per branch and the base scanned five times,
     verified). ``start``/``eff`` are Columns of ``ts_type``
@@ -234,9 +235,9 @@ def scd2_dim(base: DataFrame, *, start, eff, ts_type: str, with_current: bool) -
         eff.alias("eff"),
     )
     b, u = base.alias("b"), upd.alias("u")
-    joined = b.join(
-        u, F.col("b.c_custkey") == F.col("u.c_custkey"), "left"
-    ).localCheckpoint(eager=True)
+    joined = materialize(
+        b.join(u, F.col("b.c_custkey") == F.col("u.c_custkey"), "left"), CORPUS
+    )
     null_to = F.lit(None).cast(ts_type)
 
     def _flag(v: bool) -> list:

@@ -33,6 +33,7 @@ from ..operators.textops import (
     signed_round_half_up,
     signed_round_half_up_sql,
 )
+from ..session_cache import CORPUS, SMALL, materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -409,12 +410,12 @@ def hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (ReuseExchange never fires on the diverged subplans). The pinned
     # frame is the two sources' (source, word) vocabulary — bounded by
     # vocab size, not corpus size.
-    items = (
+    items = materialize(
         d.filter(F.col("source").isin("src0", "src1"))
         .select("source", F.explode(tokens("text")).alias("word"))
         .filter(F.col("word") != "")
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        CORPUS,
     )
     bucket, rho = _hll_terms("word")
     regs = (
@@ -782,9 +783,9 @@ def quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # executed TWICE per call — eagerly for the k literal below, then
     # again inside the terminal job when scdf re-evaluated the limit
     # (r15, guide §1.3 duplicated-subtree smell)
-    samp = (
-        base.orderBy("u", "p").limit(_QSK_K).select("p")
-        .localCheckpoint(eager=True)
+    samp = materialize(
+        base.orderBy("u", "p").limit(_QSK_K).select("p"),
+        SMALL,
     )
     k = samp.count()
     scdf = samp.withColumn("r", F.row_number().over(Window.orderBy("p")))

@@ -22,7 +22,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session_cache import session_cached
+from ..session_cache import SMALL, materialize, session_cached
 from ..sources.tables import SCHEMAS, _pin_conf, convert_events_ts, events_ts_unit, load_table
 from .io import _tmp
 from .registry import query
@@ -126,7 +126,7 @@ def _drain(df: DataFrame, mode: str) -> DataFrame:
         finally:
             q.stop()
             q.awaitTermination()
-        return spark.table(name).localCheckpoint(eager=True)
+        return materialize(spark.table(name), SMALL)
     finally:
         spark.catalog.dropTempView(name)
 
@@ -363,7 +363,7 @@ def streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # snapshot inside, drop in the outer finally (_drain
         # discipline: the sink releases even when the drain fails)
         return (
-            spark.table(name).orderBy("window_start").localCheckpoint(eager=True)
+            materialize(spark.table(name).orderBy("window_start"), SMALL)
         )
     finally:
         spark.catalog.dropTempView(name)
@@ -550,12 +550,12 @@ def streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DELETED before returning — per-call mkdtemp roots otherwise
     # accumulate a full purchase copy per invocation for the life of
     # /tmp
-    out = back.agg(
+    out = materialize(back.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("user_id").alias("n_users"),
         (F.sum(F.round(F.col("value") * 100).cast("bigint")) / 100.0)
         .alias("sum_value"),
-    ).localCheckpoint(eager=True)
+    ), SMALL)
     shutil.rmtree(root, ignore_errors=True)
     return out
 
@@ -712,7 +712,7 @@ def streaming_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # snapshot + drop (the _drain discipline): the rate sink would
     # otherwise pin thousands of generated rows per invocation in
     # driver memory for the session lifetime
-    out = spark.table(name).localCheckpoint(eager=True)
+    out = materialize(spark.table(name), SMALL)
     spark.catalog.dropTempView(name)
     return out.agg(
         (F.count(F.lit(1)) > 0).alias("has_rows"),
@@ -770,11 +770,11 @@ def streaming_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.parquet(out_dir)
     # eager 1-row summary, then delete the per-call epoch-partitioned
     # copy + checkpoint (the parquet-sink cleanup rationale)
-    out = back.agg(
+    out = materialize(back.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("event_id").alias("n_ids"),
         F.countDistinct("user_id").alias("n_users"),
-    ).localCheckpoint(eager=True)
+    ), SMALL)
     shutil.rmtree(root, ignore_errors=True)
     return out
 

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from ..iterate import checkpointed_rounds
 from ..operators import textops
 from ..operators.textops import round_half_up
-from ..session_cache import session_cached
+from ..session_cache import CORPUS, SMALL, materialize, session_cached
 from ..sources.tables import load_table
 from .registry import query
 
@@ -2680,21 +2680,19 @@ def _bigram_lm_frames(
         toks.select("w1", F.lead("w1", 1).over(wdoc).alias("w2"))
         .filter(F.col("w2").isNotNull())
     )
-    cnt = (
+    cnt = materialize(
         bg.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("n")),
+        SMALL,
     )
-    pre = cnt.groupBy("w1").agg(F.sum("n").alias("np")).localCheckpoint(
-        eager=True
-    )
-    top1 = (
+    pre = materialize(cnt.groupBy("w1").agg(F.sum("n").alias("np")), SMALL)
+    top1 = materialize(
         toks.groupBy("w1")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), "w1")
         .limit(1)
-        .select("w1")
-        .localCheckpoint(eager=True)
+        .select("w1"),
+        SMALL,
     )
     return cnt, pre, top1
 
@@ -3316,13 +3314,13 @@ def _unigram_em(spark: SparkSession, sf_dir: str) -> dict:
     import math
 
     d = load_table(spark, sf_dir, "documents")
-    wl = (
+    wl = materialize(
         d.select(F.explode(F.split("text", " ")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .withColumn("len", F.length("word"))
-        .localCheckpoint(eager=True)
+        .withColumn("len", F.length("word")),
+        SMALL,
     )
     mx = wl.agg(F.max("len").alias("m")).first()["m"]
     if mx is None or mx > _UNI_MAXLEN:
@@ -3332,7 +3330,7 @@ def _unigram_em(spark: SparkSession, sf_dir: str) -> dict:
         )
     from pyspark.sql.window import Window
 
-    occs = (
+    occs = materialize(
         wl.select(
             "word", "cnt", "len",
             F.explode(F.sequence(F.lit(1), F.col("len"))).alias("s"),
@@ -3344,8 +3342,8 @@ def _unigram_em(spark: SparkSession, sf_dir: str) -> dict:
             ).alias("l"),
         )
         .filter(F.col("s") + F.col("l") - 1 <= F.col("len"))
-        .withColumn("piece", F.col("word").substr(F.col("s"), F.col("l")))
-        .localCheckpoint(eager=True)
+        .withColumn("piece", F.col("word").substr(F.col("s"), F.col("l"))),
+        SMALL,
     )
     cands = occs.filter(F.col("l") >= 2).groupBy("piece").agg(
         F.sum("cnt").alias("f")
@@ -3400,7 +3398,7 @@ def _unigram_em(spark: SparkSession, sf_dir: str) -> dict:
                 # break lineage so CollapseProject cannot inline the DP
                 # recurrence into one combinatorial projection (31-row
                 # frame — the checkpoint is plan hygiene, not data)
-                fb = fb.localCheckpoint(eager=True)
+                fb = materialize(fb, SMALL)
         farr = F.array(*[F.col(f"f{i}") for i in range(_UNI_MAXLEN + 1)])
         garr = F.array(*[F.col(f"g{i}") for i in range(_UNI_MAXLEN + 1)])
         w = (
@@ -3500,7 +3498,7 @@ def tfidf_doc_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") <= _TDS_MAX_DF)
     )
     nd = d.agg(F.count(F.lit(1)).alias("n"))
-    wt = (
+    wt = materialize(
         tok.join(kept, "w")
         .crossJoin(F.broadcast(nd))
         .select(
@@ -3509,9 +3507,9 @@ def tfidf_doc_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_half_up(
                 F.col("tf") * F.log(F.col("n") * F.lit(1.0) / F.col("df")), 6
             ).alias("wgt"),
-        )
-        .localCheckpoint(eager=True)  # consumed 3x: norms + both join sides
-    )
+        ),
+        CORPUS,
+    )  # consumed 3x: norms + both join sides
     nrm = wt.groupBy("doc_id").agg(
         round_half_up(F.sum(F.col("wgt") * F.col("wgt")), 6).alias("n2")
     )

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from ..iterate import checkpointed_rounds
 from ..operators import similarity as ops
 from ..operators.textops import round_half_up, signed_round_half_up
-from ..session_cache import release, session_cached
+from ..session_cache import CORPUS, SMALL, materialize, release, session_cached
 from ..sources.tables import load_table
 from .registry import query
 
@@ -454,7 +454,7 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> "ops.IvfIndex":
         dim=_EMB_DIM,
         n_clusters=n_clusters,
         lloyd_iters=2,
-        materialize=True,
+        pin=True,
     )
 
 
@@ -473,10 +473,10 @@ _EXACT_TOPK8_NQ = 8
 
 @session_cached("embeddings")
 def _exact_topk8_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ops.batch_cosine_topk(
+    return materialize(ops.batch_cosine_topk(
         load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding",
         n_queries=_EXACT_TOPK8_NQ, k=_EXACT_TOPK8_K,
-    ).localCheckpoint(eager=True)
+    ), SMALL)
 
 
 @query(
@@ -664,7 +664,7 @@ def _power3(mat: DataFrame, start_i: int) -> DataFrame:
     )
     for y in checkpointed_rounds(y, matvec, 3):
         pass
-    x = _unit(y).localCheckpoint(eager=True)
+    x = materialize(_unit(y), SMALL)
     release(y)
     return x
 
@@ -733,13 +733,9 @@ def pca_power_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines start from the same x0 and the iterate's sign evolves
     identically (float divergence ~1e-15 cannot flip it; components
     near zero are normalized by round+0.0 on both sides)."""
-    from pyspark import StorageLevel
-
-    # persist (not localCheckpoint): a checkpointed cmat left no
-    # handle to free its blocks, leaking one d^2-row RDD per
-    # invocation for the session's lifetime — persist + the finally
-    # below releases it once the (d-row) result is materialized
-    cmat = _cov_matrix(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    # the finally below releases cmat once the (d-row) result is
+    # materialized
+    cmat = materialize(_cov_matrix(spark, sf_dir), CORPUS)
     try:
         x = _power3(cmat, 1)
     finally:
@@ -1825,7 +1821,7 @@ def ann_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k over the cellrank-filtered pool — the corpus is touched
     once, not once per level (an n_probe loop of ivf_serve calls
     would triple the probe+rescore work for a 3-point curve). The
-    rescored pool and the exact top-k are checkpointed (both
+    rescored pool and the exact top-k are materialized (both
     bounded: ~n_queries·max_probe/n_clusters of the corpus and
     k·n_queries rows) so the three level branches replay executor
     state instead of the scan. Ranking keys (floored-1e9 d2 asc +
@@ -1864,7 +1860,7 @@ def ann_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cellrank") <= max_probe)
         .select("query_id", "cid", "cellrank")
     )
-    cand = (
+    cand = materialize(
         assigned.join(F.broadcast(cellrank), "cid")
         .filter(F.col("vec_id") != F.col("query_id"))
         .join(flat, "vec_id")
@@ -1872,8 +1868,8 @@ def ann_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "query_id", "vec_id", "cellrank",
             f"{cosine_sql('v', 'q', dim)} AS cos_raw",
-        )
-        .localCheckpoint(eager=True)
+        ),
+        CORPUS,
     )
     # the cached frame is already pinned — no per-call checkpoint
     exact = (
@@ -2103,8 +2099,6 @@ def _pq_adc_sum(m: int, k: int) -> str:
 def _pq_codebooks(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[list[list[int]]]]:
-    from pyspark import StorageLevel
-
     from ..operators.similarity import as_double
 
     dim, m, sd, k = _PQ_M * _PQ_SUBDIM, _PQ_M, _PQ_SUBDIM, _PQ_K
@@ -2114,9 +2108,7 @@ def _pq_codebooks(
     e = e.withColumn(
         "mx", F.greatest(F.array_max("emb"), -F.array_min("emb"))
     ).filter(F.col("mx") > 0)
-    flat = e.selectExpr("vec_id", *_int8_flat_exprs(dim)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    flat = materialize(e.selectExpr("vec_id", *_int8_flat_exprs(dim)), CORPUS)
     try:
         return _pq_train(flat)
     except BaseException:
@@ -2357,8 +2349,6 @@ def logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is the only N-row join — at cluster scale you'd bucket pt
     and the residual frame by vec_id once and reuse the layout
     across all rounds (and across every other embedding operator)."""
-    from pyspark import StorageLevel
-
     from ..operators.similarity import as_double
 
     eta = _LOGREG_ETA
@@ -2371,13 +2361,13 @@ def logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("label") == 0, 1.0).otherwise(0.0).alias("y"),
         )
     )
-    pt = (
+    pt = materialize(
         e.select("vec_id", F.posexplode("emb").alias("pos", "x"))
         .select("vec_id", (F.col("pos") + 1).alias("j"), "x")
-        .unionAll(e.select("vec_id", F.lit(0).alias("j"), F.lit(1.0).alias("x")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .unionAll(e.select("vec_id", F.lit(0).alias("j"), F.lit(1.0).alias("x"))),
+        CORPUS,
     )
-    yv = e.select("vec_id", "y").persist(StorageLevel.MEMORY_AND_DISK)
+    yv = materialize(e.select("vec_id", "y"), CORPUS)
     try:
         n = yv.count()
         if n == 0:
@@ -2389,13 +2379,12 @@ def logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..operators.quality import unrolled_gd
 
         w = unrolled_gd(pt, yv, "vec_id", n, eta, _LOGREG_ITERS)
-        return w.select(
+        return materialize(w.select(
             F.col("j").cast("int").alias("j"),
             (signed_round_half_up(F.col("w"), 6) + F.lit(0.0)).alias("weight"),
-        ).localCheckpoint(eager=True)
+        ), SMALL)
     finally:
-        pt.unpersist()
-        yv.unpersist()
+        release((pt, yv))
 
 
 def _ivf_pq_oracle(
@@ -2892,9 +2881,7 @@ def pca_top2_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     differential pins that); six
     rounds of drift stay ~1e-12, far under the 6dp pin — the
     pca_power_component argument, one deflation deeper."""
-    from pyspark import StorageLevel
-
-    cmat = _cov_matrix(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    cmat = materialize(_cov_matrix(spark, sf_dir), CORPUS)
     try:
         pc1 = _power3(cmat, 1)
         lam = (
@@ -2907,7 +2894,7 @@ def pca_top2_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg(F.sum(F.col("c") * F.col("a") * F.col("b")).alias("l"))
         )
-        cov2 = (
+        cov2 = materialize(
             cmat.join(F.broadcast(pc1.select("i", F.col("v").alias("a"))), "i")
             .join(
                 F.broadcast(
@@ -2919,8 +2906,8 @@ def pca_top2_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "i", "j",
                 (F.col("c") - F.col("l") * F.col("a") * F.col("b")).alias("c"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            ),
+            CORPUS,
         )
         try:
             pc2 = _power3(cov2, 2)

@@ -53,7 +53,10 @@ logical plans scale to a multi-executor cluster:
   about a third on both benchmark workloads. The archive is
   ``$XDG_CACHE_HOME/pydra_map_reduce_spark/<key>.jsa`` (``~/.cache``
   by default), keyed by the java that spark-class runs, the jars
-  directory (each jar's name, size and mtime) and the driver heap
+  directory (each jar's name, size and mtime), the driver heap and any
+  class-path additions (``SPARK_DIST_CLASSPATH``,
+  ``--driver-class-path``, ``spark.driver.extraClassPath``), since the
+  JVM refuses an archive dumped with another class path
   (``_class_archive``). JDK 17 will neither dump nor map an archive
   with a non-empty directory on the class path, and Spark puts the
   conf directory first on it. So the launch runs with
@@ -104,6 +107,11 @@ _NAMES_COLLECTOR = re.compile(r"-XX:[+-]Use\w*GC\b")
 _NAMES_CDS = re.compile(
     r"-Xshare|SharedArchiveFile|ArchiveClassesAtExit|RecordDynamicDumpInfo"
     r"|DumpLoadedClassList|SharedClassListFile|UseSharedSpaces"
+)
+# class-path additions a launch source names, as text (values, also of
+# SPARK_DIST_CLASSPATH, go into the archive key)
+_CLASS_PATH = re.compile(
+    r"(?:--driver-class-path|spark\.driver\.extraClassPath)(?:=|\s+)(\S+)"
 )
 # the launch that dumps the archive; the JVM's own CDS log lines ("Skipping
 # ...: Not linked", about 4 k of them per dump) would flood stdout
@@ -170,15 +178,16 @@ def _launch_text() -> str:
     return "\n".join(texts)
 
 
-def _class_archive(heap: str | None) -> str | None:
+def _class_archive(heap: str | None, launch_text: str) -> str | None:
     """The class-data archive of this launch, or None when the launch
     cannot use one: the conf directory holds a real file, the java or
     the jars directory is not found, or the cache directory cannot be
     written (or, for a dump, has no room). A cache path with white space
     cannot be: the JVM's diagnostic commands split their arguments on it.
     The key digests the java that spark-class runs, each jar of the jars
-    directory, and the driver heap. Beside the archive is the empty
-    ``conf`` directory that its launches run with."""
+    directory, the driver heap and any class-path additions, which the
+    JVM checks against the dumping launch's. Beside the archive is the
+    empty ``conf`` directory that its launches run with."""
     conf = _conf_dir()
     java = os.environ.get("JAVA_HOME")
     java = os.path.join(java, "bin", "java") if java else shutil.which("java")
@@ -188,6 +197,11 @@ def _class_archive(heap: str | None) -> str | None:
     if not java or re.search(r"\s", cache):
         return None
     key = hashlib.sha256(f"{heap}\n".encode())
+    # a launch without class-path additions keeps the key it had before
+    # they were digested, so its archive stays valid
+    additions = [os.environ.get("SPARK_DIST_CLASSPATH"), *_CLASS_PATH.findall(launch_text)]
+    for entry in filter(None, additions):
+        key.update(f"class path {entry}\n".encode())
     try:
         if os.path.exists(conf) and not all(n.endswith(".template") for n in os.listdir(conf)):
             return None
@@ -351,7 +365,7 @@ def get_spark(
     if not master_given:
         text = _launch_text()
         collector = None if _NAMES_COLLECTOR.search(text) else _SERIAL_GC
-        archive = None if _NAMES_CDS.search(text) else _class_archive(heap)
+        archive = None if _NAMES_CDS.search(text) else _class_archive(heap, text)
         cds = ()
         if archive:
             os.environ["SPARK_CONF_DIR"] = os.path.join(os.path.dirname(archive), "conf")

@@ -32,14 +32,39 @@ model tables).
 
 Plain Python values (a fitted piece table) keep the same key, sweep and
 LRU order; they hold no Spark storage to release or probe.
+
+``materialize(df, size)`` is the one place engine code stores a frame.
+The caller names how big the frame is; the class picks the storage:
+
+- ``SMALL``: bounded by model dimensions, node count or result rows (a
+  vocabulary, centroids, a weight vector, per-node iterative state, a
+  report). An eager ``localCheckpoint`` in memory: computed once, and
+  its lineage is cut, so plans built on it (every round of
+  ``iterate.checkpointed_rounds``) stay flat.
+- ``CORPUS``: a narrow frame (ids and a few numbers) that grows with
+  the corpus. A lazy ``persist(MEMORY_AND_DISK)``: the lineage stays,
+  so a lost block is recomputed instead of failing the query. A site
+  that needs the frame computed before it returns runs one action
+  itself and says why.
+- ``WIDE``: a corpus-scaling text or array frame (the apriori rule: a
+  heap-pinned pair frame of this kind once exhausted a 1 GB heap). A
+  lazy ``persist(DISK_ONLY)``.
+- ``CONSIST``: a sampled or non-deterministic frame that two consumers
+  must see as one materialization (``corpus.stable_row_ids``). An eager
+  ``localCheckpoint`` on disk: never recomputed, so a lost block fails
+  loudly instead of yielding different rows.
+
+``release`` frees the storage of every class.
 """
 
 from __future__ import annotations
 
 import functools
+from enum import Enum
 from typing import Any, Callable, NamedTuple
 
 from py4j.protocol import Py4JError
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 from .sources.tables import _fixture_key
@@ -77,6 +102,27 @@ def _checkpoint_rdds(value: Any) -> list[Any]:
             if leaf.getClass().getSimpleName() == "LogicalRDD":
                 rdds.append(leaf.rdd())
     return [r for r in rdds if r.isCheckpointed()]
+
+
+class Size(Enum):
+    """A frame's size class (module docstring); its value is how the
+    frame is stored: (local checkpoint?, storage level)."""
+
+    SMALL = (True, None)
+    CORPUS = (False, StorageLevel.MEMORY_AND_DISK)
+    WIDE = (False, StorageLevel.DISK_ONLY)
+    CONSIST = (True, StorageLevel.DISK_ONLY)
+
+
+SMALL, CORPUS, WIDE, CONSIST = Size
+
+
+def materialize(df: DataFrame, size: Size) -> DataFrame:
+    """Store ``df`` as its size class says; see the module docstring."""
+    checkpoint, level = size.value
+    if checkpoint:
+        return df.localCheckpoint(eager=True, storageLevel=level)
+    return df.persist(level)
 
 
 def release(value: Any) -> None:

@@ -197,6 +197,9 @@ def _assert_schema(spark: SparkSession, path: str, name: str) -> None:
 # silently
 _VERIFIED: set[tuple[str, int, float]] = set()
 
+# the fixture key each path was last loaded with in this process
+_LOADED: dict[str, tuple[str, int, float]] = {}
+
 # Session confs load_table pins (documented public side effect, see
 # load_table docstring). Previous values are remembered per session the
 # first time each key is pinned so callers can undo the pins. The
@@ -275,6 +278,12 @@ def load_table(
     _pin_conf(spark, "spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
     key = _fixture_key(path)
+    if _LOADED.setdefault(path, key) != key:
+        # regenerated since the last load: CacheManager would serve a
+        # persisted frame over the old files to any identical new plan
+        # (operator-internal persists that no session cache releases)
+        spark.catalog.refreshByPath(path)
+        _LOADED[path] = key
     if name == "events" and events_ts_unit(path, key) == "ns":
         # legacy layout: ts is TIMESTAMP(NANOS) on disk; see _events_raw.
         _pin_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")

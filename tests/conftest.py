@@ -16,6 +16,11 @@ from pydra_map_reduce_spark.sources.tables import TABLES  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
 
 
+def stored_rdds(spark) -> set[int]:
+    """The ids of the RDDs that have blocks in storage."""
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="pydra-tests")

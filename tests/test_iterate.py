@@ -19,13 +19,9 @@ from pydra_map_reduce_spark.plans import REGISTRY
 from pydra_map_reduce_spark.plans.dedup import _minhash_portable_pairs
 from pydra_map_reduce_spark.session_cache import session_cached
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, stored_rdds
 
 _SF0001_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
-
-
-def _stored(spark) -> set[int]:
-    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
 def _reads(df) -> set[int]:
@@ -58,22 +54,22 @@ def _ids(df) -> list[int]:
 
 def test_only_the_last_round_stays_stored(spark):
     seed = spark.range(10)
-    base = _stored(spark)
+    base = stored_rdds(spark)
     prev = seed
     for state in checkpointed_rounds(seed, _inc, 5):
         # the round a state was computed from is still readable here
         assert _ids(state) == [i + 1 for i in _ids(prev)]
         prev = state
-    assert _stored(spark) - base == _reads(state)
+    assert stored_rdds(spark) - base == _reads(state)
     assert _ids(state) == list(range(5, 15))
 
 
 def test_break_keeps_only_the_round_it_left_at(spark):
-    base = _stored(spark)
+    base = stored_rdds(spark)
     for r, state in enumerate(checkpointed_rounds(spark.range(10), _inc, 5), 1):
         if r == 2:
             break
-    assert _stored(spark) - base == _reads(state)
+    assert stored_rdds(spark) - base == _reads(state)
     assert _ids(state) == list(range(2, 12))
 
 
@@ -83,11 +79,11 @@ def test_failing_step_leaves_no_round_stored(spark):
             raise RuntimeError("round 3 failed")
         return _inc(df, r)
 
-    base = _stored(spark)
+    base = stored_rdds(spark)
     with pytest.raises(RuntimeError, match="round 3 failed"):
         for _state in checkpointed_rounds(spark.range(10), step, 5):
             pass
-    assert not _stored(spark) - base
+    assert not stored_rdds(spark) - base
 
 
 @session_cached("region")
@@ -107,7 +103,7 @@ def test_seed_over_a_session_cache_keeps_its_blocks(spark, tmp_path):
         for state in checkpointed_rounds(seed, _inc, 3):
             pass
         SC.release(state)
-        assert _reads(cached) <= _stored(spark)
+        assert _reads(cached) <= stored_rdds(spark)
         sc = spark.sparkContext
         sc.setJobGroup("rounds-seed-hit", "cache hit after rounds")
         try:
@@ -138,13 +134,13 @@ def test_kernel_leaves_no_superseded_round_stored(spark, name):
     held by a session-cache entry."""
     if name == "dedup_clusters_star":
         # a cold build of its pair cache leaves minhash_lsh_pairs'
-        # internal cand checkpoint, which only the JVM's ContextCleaner
-        # frees: build the cache first, so only the rounds are measured
-        _minhash_portable_pairs(spark, _SF0001_DIR)
-    base = _stored(spark)
+        # internal cand stored, and no caller releases it: compute the
+        # cache first, so only the rounds are measured
+        _minhash_portable_pairs(spark, _SF0001_DIR).count()
+    base = stored_rdds(spark)
     df = REGISTRY[name].fn(spark, _SF0001_DIR)
     assert df.collect()
-    left = _stored(spark) - base - _reads(df) - _held_by_session_caches(spark)
+    left = stored_rdds(spark) - base - _reads(df) - _held_by_session_caches(spark)
     assert not left, f"{name} left {len(left)} superseded RDD(s) stored"
 
 

@@ -894,21 +894,19 @@ def test_link_prediction_broadcasts_node_degrees(spark, monkeypatch, over_limit)
     both sides sort-merge."""
     import re
 
-    from pyspark.sql.classic.dataframe import DataFrame
-
     from pydra_map_reduce_spark.plans import graph as G
 
     if over_limit:
         monkeypatch.setattr(G, "_LP_BCAST_NODES", 0)
     plans = []
-    checkpoint = DataFrame.localCheckpoint
+    materialize = G.materialize
 
-    def spy(self, eager=True):
-        out = checkpoint(self, eager)
-        plans.append(_executed(self))
+    def spy(df, size):
+        out = materialize(df, size)
+        plans.append(_executed(df))
         return out
 
-    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    monkeypatch.setattr(G, "materialize", spy)
     REGISTRY["link_prediction_capped"].fn(spark, SF_DIR)
     plan = _final_plan(plans[-1])
     joins = re.findall(r"(\w+Join) \[(\w+)#\d+L\], \[x_n#\d+L\], Inner(, Build\w+)?", plan)
@@ -1236,152 +1234,42 @@ def test_dedup_clusters_minhash_books_balance(spark):
 
 
 # ---------------------------------------------------------------------------
-# Heap-pin audit lint (r13 verdict next #3). localCheckpoint stores
-# MEMORY_AND_DISK-deserialized on the driver-local executors — a HEAP
-# pin. The apriori round-13 incident (a corpus-row-scale pair frame
-# heap-pinned via checkpoint OOM'd the 1 GB default heap at the 10x
-# tier) proved the failure class is real, so every site is audited
-# into the table below with a storage class; a NEW site (or a new
-# site count in an audited function) fails this lint until it is
-# classified — the _GLOBAL_WINDOW_ALLOWED pattern applied to storage.
-#
-# Classes (full table + sf1 sweep evidence in BASELINE.md):
-#   RESULT   — final top-k/report rows (≤ dozens), pinned so
-#              corpus-sized upstream persists can release pre-return
-#   MODEL    — vocab/centroid/bin/weight frames, bounded by model
-#              dims (Heaps-sublinear vocab counts included)
-#   NODE     — per-node/per-doc iterative state, narrow (ids + a few
-#              ints); per-round checkpoint REQUIRED to cut iterative
-#              lineage (pagerank/LPA/CC/GD class)
-#   CORPUS_N — corpus-scaling but NARROW (few int/double columns);
-#              justified in place by a measured reuse win, with the
-#              sf1 sweep as the regression fence. Corpus-scaling
-#              TEXT/array-heavy frames must use persist(DISK_ONLY)
-#              instead (the apriori rule) — none may appear here.
-#   CONSIST  — correctness pin: two consumers MUST observe one
-#              sampled/non-deterministic materialization, and a
-#              persist could silently recompute on block loss where a
-#              checkpoint fails loudly (stable_row_ids class)
-#
-# A call of iterate.checkpointed_rounds is a site too (it checkpoints
-# every round of its state), counted in its caller's row; its state
-# must be NODE or MODEL class — a corpus-sized round state fails here.
-_LOCALCHECKPOINT_AUDIT = {
-    # (module, function): (n_sites, class)
-    # the helper's one site; each caller's row below classes its state
-    ("iterate.py", "checkpointed_rounds"): (1, "NODE"),
-    ("operators/dedup.py", "dedup_clusters"): (1, "NODE"),
-    ("operators/dedup.py", "dedup_clusters_star"): (1, "NODE"),
-    ("operators/dedup.py", "minhash_lsh_pairs"): (1, "CORPUS_N"),
-    ("operators/graph.py", "pagerank"): (1, "NODE"),
-    ("operators/similarity.py", "ivf_train_distributed"): (2, "MODEL"),
-    ("plans/analytics.py", "chi2_independence"): (1, "MODEL"),
-    ("plans/corpus.py", "dsir_selection"): (1, "RESULT"),
-    ("plans/corpus.py", "stable_row_ids"): (1, "CONSIST"),
-    ("plans/dedup.py", "_minhash_portable_pairs"): (1, "CORPUS_N"),
-    ("plans/dedup.py", "bbit_minhash_error"): (1, "RESULT"),
-    ("plans/dedup.py", "dedup_threshold_sweep"): (1, "CORPUS_N"),
-    # lsh_band_sweep's own checkpoint was removed in r14 WP5 (it reads
-    # the session-cached signature frame instead); row retired here.
-    ("plans/dedup.py", "lsh_recall"): (1, "CORPUS_N"),
-    ("plans/dedup.py", "minhash_estimate_error"): (1, "RESULT"),
-    ("plans/dedup.py", "span_width_sweep"): (1, "CORPUS_N"),
-    ("plans/events.py", "behavior_profile_topk"): (1, "CORPUS_N"),
-    ("plans/graph.py", "bfs_hops"): (1, "NODE"),
-    ("plans/graph.py", "kcore_decompose"): (1, "NODE"),
-    ("plans/graph.py", "link_prediction_capped"): (1, "RESULT"),
-    ("plans/graph.py", "link_prediction_jaccard"): (1, "CORPUS_N"),
-    ("plans/graph.py", "lpa_communities"): (2, "NODE"),
-    ("plans/graph.py", "random_walks"): (2, "NODE"),
-    ("plans/graph.py", "recursive_cte_hops"): (1, "CORPUS_N"),
-    ("plans/graph.py", "triangle_count"): (1, "RESULT"),
-    ("plans/joins.py", "blocking_quality"): (1, "RESULT"),
-    ("plans/mleval.py", "_langid_features"): (2, "CORPUS_N"),
-    ("plans/mleval.py", "_qcg_features"): (2, "CORPUS_N"),
-    ("plans/mleval.py", "isotonic_calibration"): (1, "MODEL"),
-    ("plans/mleval.py", "lang_id_train"): (1, "MODEL"),
-    ("plans/mleval.py", "platt_scaling"): (2, "MODEL"),
-    ("plans/relational.py", "association_rules"): (1, "RESULT"),
-    ("plans/setops.py", "scd2_dim"): (1, "CORPUS_N"),
-    ("plans/sketches.py", "hll_merge"): (1, "CORPUS_N"),
-    ("plans/sketches.py", "quantile_sketch"): (1, "MODEL"),
-    ("plans/streaming.py", "_drain"): (1, "RESULT"),
-    ("plans/streaming.py", "streaming_foreach_batch"): (1, "RESULT"),
-    ("plans/streaming.py", "streaming_late_drop"): (1, "RESULT"),
-    ("plans/streaming.py", "streaming_parquet_sink"): (1, "RESULT"),
-    ("plans/streaming.py", "streaming_rate_source"): (1, "RESULT"),
-    ("plans/text.py", "_bigram_lm_frames"): (3, "MODEL"),
-    ("plans/text.py", "_bpe_learn"): (1, "MODEL"),
-    ("plans/text.py", "_unigram_em"): (3, "MODEL"),
-    ("plans/text.py", "tfidf_doc_similarity"): (1, "CORPUS_N"),
-    ("plans/vectors.py", "_exact_topk8_cached"): (1, "MODEL"),
-    ("plans/vectors.py", "_power3"): (2, "MODEL"),
-    ("plans/vectors.py", "ann_probe_curve"): (1, "CORPUS_N"),
-    ("plans/vectors.py", "logreg_train"): (1, "CORPUS_N"),
-}
+# Storage lint: ``session_cache.materialize`` is the one place engine code
+# stores a frame, and each call names one of its size classes (defined in
+# the ``session_cache`` module docstring).
+_RAW_STORAGE_CALLS = {"localCheckpoint", "checkpoint", "persist", "cache"}
 
 
-def test_localcheckpoint_sites_audited():
-    """Every localCheckpoint call site and every checkpointed_rounds
-    call must appear in the audited allowlist above with its exact
-    site count — adding a heap pin without classifying it
-    (corpus-TEXT frames must be DISK_ONLY, the apriori rule) fails
-    here, and so does a checkpointed_rounds state that is not NODE or
-    MODEL class."""
+def test_storage_goes_through_materialize():
+    """No engine module but ``session_cache`` calls a storage method, and
+    every ``materialize`` call passes a size class by name: a string or
+    any other expression fails, so no site can pick its own storage."""
     import ast
-    import os
+    import glob
 
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "pydra_map_reduce_spark",
-    )
-    found: dict[tuple, int] = {}
-    rounds_callers: set[tuple] = set()
-    for dirpath, _dirs, files in os.walk(root):
-        if "__pycache__" in dirpath:
-            continue
-        for fn in files:
-            if not fn.endswith(".py"):
+    from pydra_map_reduce_spark import session_cache
+
+    classes = {s.name for s in session_cache.Size}
+    root = _os.path.dirname(session_cache.__file__)
+    raw, unclassed, sites = [], [], 0
+    for path in glob.glob(_os.path.join(root, "**", "*.py"), recursive=True):
+        rel = _os.path.relpath(path, root)
+        for node in ast.walk(ast.parse(open(path).read())):
+            if not isinstance(node, ast.Call):
                 continue
-            path = os.path.join(dirpath, fn)
-            rel = os.path.relpath(path, root).replace(os.sep, "/")
-            tree = ast.parse(open(path).read())
-            funcs = []
-            for node in ast.walk(tree):
-                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                    funcs.append(
-                        (node.lineno, node.end_lineno or node.lineno, node.name)
-                    )
-            for node in ast.walk(tree):
-                is_rounds = isinstance(node, ast.Call) and (
-                    getattr(node.func, "id", None) == "checkpointed_rounds"
-                    or getattr(node.func, "attr", None) == "checkpointed_rounds"
-                )
-                if is_rounds or (
-                    isinstance(node, ast.Attribute)
-                    and node.attr == "localCheckpoint"
-                ):
-                    enc, enc_start = "<module>", -1
-                    for s, e, name in funcs:
-                        if s <= node.lineno <= e and s > enc_start:
-                            enc, enc_start = name, s
-                    found[(rel, enc)] = found.get((rel, enc), 0) + 1
-                    if is_rounds:
-                        rounds_callers.add((rel, enc))
-    assert rounds_callers, "no checkpointed_rounds call found: scan is stale"
-    bad = sorted(
-        k for k in rounds_callers
-        if _LOCALCHECKPOINT_AUDIT.get(k, (0, ""))[1] not in ("NODE", "MODEL")
-    )
-    assert not bad, f"checkpointed_rounds state must be NODE or MODEL class: {bad}"
-    audited = {k: v[0] for k, v in _LOCALCHECKPOINT_AUDIT.items()}
-    assert found == audited, (
-        "localCheckpoint heap-pin audit drift — classify new sites in "
-        "_LOCALCHECKPOINT_AUDIT (and BASELINE.md) or remove stale rows: "
-        f"new={sorted(set(found) - set(audited))} "
-        f"stale={sorted(set(audited) - set(found))} "
-        f"count_changed={sorted(k for k in found if k in audited and found[k] != audited[k])}"
-    )
+            func = node.func
+            if isinstance(func, ast.Attribute) and func.attr in _RAW_STORAGE_CALLS:
+                if rel != "session_cache.py":
+                    raw.append(f"{rel}:{node.lineno} .{func.attr}(")
+            elif getattr(func, "id", getattr(func, "attr", None)) == "materialize":
+                sites += 1
+                args = [*node.args, *(k.value for k in node.keywords)]
+                size = args[1] if len(args) == 2 else None
+                if getattr(size, "id", getattr(size, "attr", None)) not in classes:
+                    unclassed.append(f"{rel}:{node.lineno}")
+    assert sites, "no materialize call found: the scan is stale"
+    assert not raw, f"store through session_cache.materialize: {sorted(raw)}"
+    assert not unclassed, f"materialize needs a size class by name: {sorted(unclassed)}"
 
 
 def test_r15_session_cached_queries_warm_call_identical(spark):

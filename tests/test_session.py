@@ -58,7 +58,10 @@ def launch(tmp_path, monkeypatch):
     spark-defaults.conf, none if empty) and ``tmp_path`` as the cache
     home; returns the recorded confs, and under "dump" the archive that
     a dump would write."""
-    for var in ("PYSPARK_SUBMIT_ARGS", "PYSPARK_GATEWAY_PORT", "MASTER", *S._JAVA_OPTION_VARS):
+    for var in (
+        "PYSPARK_SUBMIT_ARGS", "PYSPARK_GATEWAY_PORT", "MASTER", "SPARK_DIST_CLASSPATH",
+        *S._JAVA_OPTION_VARS,
+    ):
         monkeypatch.delenv(var, raising=False)
     conf_dir = tmp_path / "conf"
     conf_dir.mkdir()
@@ -177,6 +180,24 @@ def test_local_launch_maps_an_existing_archive(launch, tmp_path):
     assert conf[_OPTS].split() == [*_POLICY, f"-XX:SharedArchiveFile={archive}"]
     assert conf[_CONF] == str(tmp_path / "pydra_map_reduce_spark" / "conf")
     assert "dump" not in conf
+
+
+@pytest.mark.parametrize(
+    "source, text",
+    [
+        ("SPARK_DIST_CLASSPATH", "/x/extra.jar"),
+        ("PYSPARK_SUBMIT_ARGS", "--driver-class-path /x/extra.jar pyspark-shell"),
+        ("--properties-file", "spark.driver.extraClassPath /x/extra.jar\n"),
+    ],
+    ids=["dist-classpath", "driver-class-path", "extra-class-path"],
+)
+def test_class_path_addition_gets_its_own_archive(launch, monkeypatch, tmp_path, source, text):
+    """The JVM refuses an archive dumped with another class path, so a
+    launch that adds to it dumps and maps an archive of its own."""
+    plain = launch()["dump"]
+    conf = launch(_write_source(monkeypatch, tmp_path, source, text))
+    assert conf["dump"] != plain
+    assert conf[_OPTS].split() == _DUMPING
 
 
 def test_real_conf_file_keeps_conf_dir_and_no_archive(launch, tmp_path):

@@ -17,7 +17,7 @@ from pydra_map_reduce_spark import session_cache as SC
 from pydra_map_reduce_spark.plans import REGISTRY
 from pydra_map_reduce_spark.session_cache import session_cached
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, stored_rdds
 
 _BUILDS: list[str] = []
 
@@ -54,10 +54,6 @@ def _region_plain(spark, sf_dir):
     return {"dir": sf_dir}
 
 
-def _stored(spark) -> set[int]:
-    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-
-
 def _fixture_dirs(tmp_path, n: int) -> list[str]:
     dirs = []
     for i in range(n):
@@ -78,17 +74,40 @@ def _entry_dirs(builder) -> list[str]:
     return [k[2] for k in SC._ENTRIES if k[0] == name]
 
 
+@pytest.mark.parametrize("size", list(SC.Size), ids=lambda s: s.name)
+def test_materialize_stores_by_size_class(spark, size):
+    """``SMALL`` is computed at once and kept in memory, ``CONSIST`` at
+    once on disk, ``WIDE`` and ``CORPUS`` at the first action (on disk,
+    in memory); ``release`` frees each of them."""
+    base = stored_rdds(spark)
+    n = 1000 + list(SC.Size).index(size)  # one plan per class: no shared cache entry
+    df = SC.materialize(spark.range(n).selectExpr("id", "id * 2 AS x"), size)
+    if size in (SC.CORPUS, SC.WIDE):
+        assert stored_rdds(spark) == base
+        assert df.count() == n
+    (info,) = [
+        r for r in spark.sparkContext._jsc.sc().getRDDStorageInfo() if r.id() not in base
+    ]
+    if size in (SC.SMALL, SC.CORPUS):
+        assert info.memSize() > 0 and info.diskSize() == 0
+    else:
+        assert info.memSize() == 0 and info.diskSize() > 0
+    assert df.count() == n
+    SC.release(df)
+    assert stored_rdds(spark) == base
+
+
 def test_stale_fixture_key_evicts_and_releases(spark, tmp_path):
     (d,) = _fixture_dirs(tmp_path, 1)
-    base = _stored(spark)
+    base = stored_rdds(spark)
     old = _region_checkpointed(spark, d)
-    old_rdds = _stored(spark) - base
+    old_rdds = stored_rdds(spark) - base
     assert old_rdds
     assert _region_checkpointed(spark, d) is old
     _bump(f"{d}/region.parquet")
     new = _region_checkpointed(spark, d)
     assert new is not old
-    assert not old_rdds & _stored(spark)
+    assert not old_rdds & stored_rdds(spark)
     assert _entry_dirs(_region_checkpointed) == [d]
     assert sorted(new.collect()) == sorted(spark.read.parquet(f"{d}/region.parquet").collect())
 
@@ -160,8 +179,8 @@ def test_lost_checkpoint_block_rebuilds(spark):
 
 def test_regenerated_fixture_returns_storage_to_baseline(spark, tmp_path):
     """Rebuilding after a fixture regeneration frees every RDD the first
-    build stored: checkpoint-backed (exact top-k truth, lang-id
-    features), persist-backed (Gopher flags), the IVF index (persisted
+    build stored: checkpoint-backed (exact top-k truth), persist-backed
+    (lang-id features, Gopher flags), the IVF index (persisted
     projection plus checkpointed centroids and assignment) and
     apriori_triples' basket frame."""
     from pydra_map_reduce_spark.plans.mleval import (
@@ -175,19 +194,59 @@ def test_regenerated_fixture_returns_storage_to_baseline(spark, tmp_path):
 
     def build():
         _exact_topk8_cached(spark, d)
-        _langid_features(spark, d)
-        _gopher_flags_cached(spark, d).count()
+        for f in (*_langid_features(spark, d), _gopher_flags_cached(spark, d)):
+            f.count()
         _ivf_index(spark, d)
         return sorted(REGISTRY["apriori_triples"].fn(spark, d).collect())
 
-    base = _stored(spark)
+    base = stored_rdds(spark)
     triples = build()
-    first = _stored(spark) - base
+    first = stored_rdds(spark) - base
     assert len(first) >= 7
     for t in ("documents", "embeddings", "lineitem"):
         _bump(f"{d}/{t}.parquet")
     assert build() == triples
-    assert not first & _stored(spark)
+    assert not first & stored_rdds(spark)
+
+
+def test_rewritten_fixture_is_not_served_from_a_stale_persist(spark, tmp_path):
+    """``_capped_pair_counts`` persists its n-gram index and no session
+    cache releases it. A fixture rewritten at the same path must not be
+    served from that entry: the next load refreshes the path, and the
+    query matches the oracle on the new file."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pydra_map_reduce_spark.sources.tables import TABLES
+
+    from .test_correctness import canon_rows
+
+    d = str(tmp_path / "sf")
+    shutil.copytree(os.path.join(os.path.dirname(SF_DIR), "sf0.001"), d)
+    q = REGISTRY["ngram_jaccard_neardup"]
+
+    def spark_rows():
+        df = q.fn(spark, d)
+        return canon_rows(df.columns, df.collect())
+
+    old = spark_rows()
+    path = f"{d}/documents.parquet"
+    t = pq.read_table(path)
+    for c in ("text", "n_chars"):  # each document takes the next one's text
+        col = t.column(c).combine_chunks()
+        rotated = pa.concat_arrays([col.slice(1), col.slice(0, 1)])
+        t = t.set_column(t.schema.get_field_index(c), t.schema.field(c), rotated)
+    pq.write_table(t, path)
+    _bump(path)
+    con = duckdb.connect()
+    for name in TABLES:
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{d}/{name}.parquet')")
+    cur = con.execute(q.oracle)
+    new = canon_rows([c[0] for c in cur.description], cur.fetchall())
+    con.close()
+    assert new != old
+    assert spark_rows() == new
 
 
 def test_streaming_late_drop_leaves_no_temp_dir(spark, tmp_path, monkeypatch):

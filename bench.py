@@ -45,11 +45,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pydra_map_reduce_spark.plans import REGISTRY  # noqa: E402
 from pydra_map_reduce_spark.session import get_spark  # noqa: E402
 
-# OLD22 (defined right after HEADLINE below) is the cross-round
-# comparison anchor BASELINE.md tracks as "old-22": the ORIGINAL
-# first-22 headline queries. tools/old22_ab.py imports it by name —
-# keep the first 22 entries of HEADLINE stable (append new queries
-# after them) or the historical A/B anchor silently shifts.
 HEADLINE = [
     "pricing_summary",       # scan → filter → hash agg (Q1 shape)
     "forecast_revenue",      # TPC-H Q6: pure filter-agg (pushdown)
@@ -231,11 +226,6 @@ HEADLINE = [
     "random_walks",          # DeepWalk corpus walks (md5 transitions)
     "quantile_sketch",       # md5-reservoir quantile estimate vs exact
 ]
-
-# The named cross-round anchor (see the comment above HEADLINE).
-# tools/old22_ab.py imports this instead of regex-scraping the source
-# (r13 advice: the scrape silently depended on comment formatting).
-OLD22 = tuple(HEADLINE[:22])
 
 
 # Queries that are BY DESIGN multiples of their serving twins —

@@ -213,7 +213,7 @@ class Pipeline:
         from .operators import dedup as _dedup
 
         return Pipeline(
-            _dedup.ngram_jaccard_pairs_capped(
+            _dedup.ngram_jaccard_pairs(
                 self.df, id_col, text_col, threshold=threshold, max_df=max_df
             )
         )

@@ -187,41 +187,31 @@ def incremental_dedup(
     ).drop("_in_idx")
 
 
+def ngram_index(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
+    """(doc_id, s, df): each document's distinct n-gram shingle ids
+    (:func:`shingle_rows`) with the shingle's document frequency — the
+    inverted index every set-similarity pair builder caps and
+    self-joins. The frequency is carried uncapped, so one stored index
+    serves every ``max_df`` (:func:`_capped_pair_counts` applies the
+    cap). The df count joins on the shingle id, the self-join's
+    shuffle key already."""
+    ex = shingle_rows(_spread(df), id_col, text_col, n)
+    dfreq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
+    return ex.join(dfreq, "s").select("doc_id", "s", "df")
+
+
 def _capped_pair_counts(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    max_df: int | None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(inter, sizes, index): the df-capped shingle inverted index
-    self-joined into per-pair intersection counts, plus per-document
-    capped set sizes — the shared front half of every set-similarity
-    pair builder (symmetric Jaccard, asymmetric containment). One
-    definition so the cap/shingle semantics cannot drift between the
-    similarity tails (mirrors plans/dedup._ngram_index_ctes on the
-    oracle side). The third element is the PERSISTED index itself —
-    returned so a caller with a one-off input CAN release it, but the
-    default lifecycle is persist-without-unpersist ON PURPOSE: Spark's
-    CacheManager keys cache entries by CANONICALIZED plan, so the five
-    registry consumers of the (n=3, max_df=100) index over the same
-    fixture share ONE evictable entry, not one per
-    invocation — measured r10: eagerly checkpointing each result and
-    unpersisting here cost the warm near-dup family ~3x
-    (containment_neardup 0.64→2.10 s, dedup_cluster_stats 2.71→4.59 s,
-    ngram_jaccard_neardup 1.18→3.04 s at sf0.1) because every call
-    rebuilt the index the cache had been serving. Pinned storage is
-    bounded at one entry per distinct (input plan, n, max_df), all
-    evictable (the unified memory manager favors execution)."""
-    df = _spread(df)
-    ex = shingle_rows(df, id_col, text_col, n)
-    if max_df is not None:
-        dfreq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-        ex = ex.join(dfreq.filter(F.col("df") <= max_df), "s").select("doc_id", "s")
-    # the (capped) shingle index feeds three plan branches (both join
-    # sides + sizes); without it each branch recomputes the full
-    # tokenize→window→distinct lineage.
-    ex = materialize(ex, CORPUS)
+    index: DataFrame, max_df: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """(inter, sizes): the shingles of ``index`` (:func:`ngram_index`)
+    in at most ``max_df`` documents, self-joined into per-pair
+    intersection counts, plus per-document capped set sizes — the
+    shared front half of every set-similarity pair builder (symmetric
+    Jaccard, asymmetric containment). One definition so the
+    cap/shingle semantics cannot drift between the similarity tails
+    (mirrors plans/dedup._ngram_index_ctes on the oracle side)."""
+    ex = index if max_df is None else index.filter(F.col("df") <= max_df)
+    ex = ex.select("doc_id", "s")
     sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).cast("int").alias("n"))
     a, b = ex.alias("a"), ex.alias("b")
     inter = (
@@ -229,7 +219,29 @@ def _capped_pair_counts(
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    return inter, sizes, ex
+    return inter, sizes
+
+
+def index_jaccard_pairs(
+    index: DataFrame, threshold: float = 0.03, max_df: int | None = 100
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) from a stored :func:`ngram_index`: the
+    symmetric-Jaccard tail of :func:`ngram_jaccard_pairs`."""
+    inter, sizes = _capped_pair_counts(index, max_df)
+    from .textops import round_half_up  # deferred: textops imports tokens from here
+
+    sa, sb = sizes.alias("sa"), sizes.alias("sb")
+    jac = F.col("n_inter").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("n_inter"))
+    # no broadcast hint on sizes: it is one row PER DOCUMENT, i.e.
+    # corpus-sized — at the module's design scale an unbounded
+    # broadcast. The candidate set is already shuffled on doc ids, so
+    # the shuffled join adds no extra exchange of the big side.
+    return (
+        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        .filter(jac >= threshold)
+        .select("doc_a", "doc_b", round_half_up(jac, 4).alias("jaccard"))
+    )
 
 
 def ngram_jaccard_pairs(
@@ -259,45 +271,39 @@ def ngram_jaccard_pairs(
     standard df-pruning trick in all-pairs similarity literature;
     near-dup semantics barely change because a shingle shared by
     thousands of documents carries no pair-discriminating signal
-    anyway. The df filter joins on the shingle id — already the
-    self-join's shuffle key, so pruning adds no extra exchange of the
-    index. Pass ``max_df=None`` to disable (small-n oracle twins
+    anyway. Pass ``max_df=None`` to disable (small-n oracle twins
     where exact uncapped jaccard is the contract).
 
-    The shingle index stays persisted after return (no unpersist):
-    CacheManager dedups it by canonicalized plan across the five
-    registry consumers, and releasing it per call measured ~3x slower
-    warm — see _capped_pair_counts for the numbers and the bound."""
-    inter, sizes, _idx = _capped_pair_counts(df, id_col, text_col, n, max_df)
+    Composition of :func:`ngram_index` (stored: it feeds both join
+    sides and the sizes) and :func:`index_jaccard_pairs`."""
+    index = materialize(ngram_index(df, id_col, text_col, n), CORPUS)
+    return index_jaccard_pairs(index, threshold, max_df)
+
+
+def index_containment_pairs(
+    index: DataFrame, threshold: float = 0.5, max_df: int | None = 100
+) -> DataFrame:
+    """(contained_id, container_id, containment) from a stored
+    :func:`ngram_index`: the containment tail of
+    :func:`containment_pairs`."""
+    inter, sizes = _capped_pair_counts(index, max_df)
     from .textops import round_half_up  # deferred: textops imports tokens from here
 
     sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("n_inter").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("n_inter"))
-    # no broadcast hint on sizes: it is one row PER DOCUMENT, i.e.
-    # corpus-sized — at the module's design scale an unbounded
-    # broadcast. The candidate set is already shuffled on doc ids, so
-    # the shuffled join adds no extra exchange of the big side.
+    n_small = F.least(F.col("sa.n"), F.col("sb.n"))
+    cont = F.col("n_inter").cast("double") / n_small
+    # doc_a < doc_b by the self-join's ordering, so on a size tie
+    # `otherwise` already names the larger id as contained
+    a_contained = F.col("sa.n") < F.col("sb.n")
     return (
         inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
         .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", round_half_up(jac, 4).alias("jaccard"))
-    )
-
-
-def ngram_jaccard_pairs_capped(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.03,
-    max_df: int = 100,
-) -> DataFrame:
-    """Alias kept for API stability: the df-cap is now default-on in
-    ngram_jaccard_pairs itself (this name predates that); both run the
-    identical capped plan."""
-    return ngram_jaccard_pairs(
-        df, id_col, text_col, n=n, threshold=threshold, max_df=max_df
+        .filter(cont >= threshold)
+        .select(
+            F.when(a_contained, F.col("doc_a")).otherwise(F.col("doc_b")).alias("contained_id"),
+            F.when(a_contained, F.col("doc_b")).otherwise(F.col("doc_a")).alias("container_id"),
+            round_half_up(cont, 4).alias("containment"),
+        )
     )
 
 
@@ -329,29 +335,9 @@ def containment_pairs(
     Scale shape: identical to the Jaccard builder — same df-capped
     inverted-index self-join (work ≤ |shingles|·max_df), same
     shuffles; only the per-pair scalar tail differs. At 100 TB the cap
-    is what bounds the posting-list buckets, not the score choice.
-
-    Index lifecycle mirrors ngram_jaccard_pairs: persisted, shared
-    via CacheManager plan-dedup, deliberately not unpersisted."""
-    inter, sizes, _idx = _capped_pair_counts(df, id_col, text_col, n, max_df)
-    from .textops import round_half_up  # deferred: textops imports tokens from here
-
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    n_small = F.least(F.col("sa.n"), F.col("sb.n"))
-    cont = F.col("n_inter").cast("double") / n_small
-    # doc_a < doc_b by the self-join's ordering, so on a size tie
-    # `otherwise` already names the larger id as contained
-    a_contained = F.col("sa.n") < F.col("sb.n")
-    return (
-        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(cont >= threshold)
-        .select(
-            F.when(a_contained, F.col("doc_a")).otherwise(F.col("doc_b")).alias("contained_id"),
-            F.when(a_contained, F.col("doc_b")).otherwise(F.col("doc_a")).alias("container_id"),
-            round_half_up(cont, 4).alias("containment"),
-        )
-    )
+    is what bounds the posting-list buckets, not the score choice."""
+    index = materialize(ngram_index(df, id_col, text_col, n), CORPUS)
+    return index_containment_pairs(index, threshold, max_df)
 
 
 def portable_shingle_ids(
@@ -433,12 +419,6 @@ def minhash_lsh_pairs(
     bucket-join→exact-rescore. bands/rows tune the S-curve: 8 bands ×
     4 rows catches J≳0.85 with high probability.
 
-    The shingle frame stays persisted after return (no unpersist) —
-    the same deliberate CacheManager-plan-dedup lifecycle as
-    _capped_pair_counts (see its docstring for the r10 measurement):
-    the five minhash-fed plan queries over one fixture share ONE
-    evictable entry, and releasing it per call rebuilt it per call.
-
     Signatures hash the shingle id through the fixed (a_i·x+b_i) mod p
     family — deterministic across runs. Shingle ids come from
     xxhash64(shingle) mod 2^32 by default (the cheap JVM hash — the
@@ -447,7 +427,10 @@ def minhash_lsh_pairs(
     IDENTICALLY by any engine with md5 (DuckDB: ('0x'||substr(md5(s),
     1,8))::BIGINT), which makes the complete pipeline — signatures,
     bands, candidate set, rescore — externally checkable bit-for-bit,
-    not just sanity-checked."""
+    not just sanity-checked.
+
+    Composition of :func:`minhash_signatures`,
+    :func:`minhash_band_candidates` and :func:`minhash_rescore`."""
     df = _spread(df)
     if n_hashes % bands:
         raise ValueError("n_hashes must be divisible by bands")
@@ -459,35 +442,41 @@ def minhash_lsh_pairs(
             f"n_hashes={n_hashes} exceeds the {len(_A)}-function "
             "deterministic hash family (_A/_B); widen the family to go higher"
         )
-    # persist: reused by signatures and by the exact rescore (same
-    # evictability note as in ngram_jaccard_pairs)
+    # stored: read by the signatures and by the exact rescore
     if portable_hash:
         sh_rows = portable_shingle_ids(df, id_col, text_col, shingle_n)
     else:
         sh_rows = shingle_rows(df, id_col, text_col, shingle_n)
     sh_rows = materialize(sh_rows, CORPUS)
     sigs = minhash_signatures(sh_rows, n_hashes)
-    cand = minhash_band_candidates(sigs, n_hashes, bands)
+    # cand is read twice by the rescore (the doc prefilter + the final
+    # pair join): store the NARROW pair frame so the heavy
+    # signature->banding lineage behind it computes exactly once
+    # (unstored, the prefilter re-ran it and quintupled the query)
+    cand = materialize(minhash_band_candidates(sigs, n_hashes, bands), CORPUS)
+    return minhash_rescore(sh_rows, cand, threshold)
+
+
+def minhash_rescore(sh_rows: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard≥threshold): the exact Jaccard of each
+    candidate pair ``cand(doc_a, doc_b)`` over the shingle-id sets
+    ``sh_rows(doc_id, s)`` — the rescore tail of
+    :func:`minhash_lsh_pairs`. Both frames are read more than once, so
+    a caller passes stored ones.
+
+    The sets are built ONLY for documents that appear in a candidate
+    pair: collect_set over the whole corpus would materialize
+    document-width arrays for every doc and then discard almost all of
+    them in the join (the filter can't push through the aggregate);
+    the left-semi prefilter bounds the heaviest shuffle to candidate
+    docs, honoring the module's only-candidates-are-rescored design
+    rule. Fixture-scale honesty: the prefilter still costs ~1.9x here
+    BECAUSE the toy corpus's candidate set covers most documents — no
+    pruning can pay off; at 10^9 docs with ~1e6 candidate pairs it is
+    the difference between a corpus-wide collect_set of
+    document-width arrays and a bounded one."""
     from .textops import round_half_up  # deferred: circular with textops
 
-    # rescore on hashed-shingle sets (same intersection modulo
-    # negligible xxhash64 collisions) — built ONLY for documents that
-    # appear in a candidate pair: collect_set over the whole corpus
-    # would materialize document-width arrays for every doc and then
-    # discard almost all of them in the join (the filter can't push
-    # through the aggregate); the left-semi prefilter bounds the
-    # heaviest shuffle to candidate docs, honoring the module's
-    # only-candidates-are-rescored design rule
-    # cand is read twice now (the doc prefilter + the final pair
-    # join): materialize the NARROW pair frame so the heavy
-    # signature->banding lineage behind it computes exactly once
-    # (unpinned, the prefilter re-ran it and quintupled the query).
-    # Fixture-scale honesty: the prefilter still costs ~1.9x here BECAUSE the
-    # toy corpus's candidate set covers most documents — no pruning
-    # can pay off; at 10^9 docs with ~1e6 candidate pairs it is the
-    # difference between a corpus-wide collect_set of document-width
-    # arrays and a bounded one, i.e. the module's design rule.
-    cand = materialize(cand, CORPUS)
     cand_docs = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .union(cand.select(F.col("doc_b").alias("doc_id")))

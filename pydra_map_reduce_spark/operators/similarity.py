@@ -898,18 +898,12 @@ def semantic_dedup(
     # Otherwise train here with pin: the flat projection feeds
     # every Lloyd round, BOTH sides of the in-cell self-join, and the
     # final aggregate — the persisted corpus scans once instead of
-    # five times (Spark's cache manager dedups repeated calls by
-    # analyzed plan, so re-invoking the operator reuses the same cache
-    # entry rather than stacking new ones); assigned comes back
-    # eagerly checkpointed, its three downstream branches replaying
-    # executor-side state. Lifecycle note (r10 review): the internal
-    # index is deliberately NOT unpersisted — over the SAME input the
-    # CacheManager plan-dedup bounds pinning at one evictable entry
-    # (the _capped_pair_counts measurement), and the registered plan
-    # query avoids this path entirely by passing the session-cached
-    # serving index. Callers cycling through many DISTINCT corpora in
-    # one session should train explicitly and release index.flat
-    # themselves.
+    # five times; assigned comes back eagerly checkpointed, its three
+    # downstream branches replaying executor-side state. Nothing
+    # releases the internal index (the registered plan query avoids
+    # this path by passing the session-cached serving index): a caller
+    # that wants it released trains explicitly and releases
+    # index.flat itself.
     if index is None:
         index = ivf_train_distributed(
             df, id_col, vec_col, dim=dim, n_clusters=n_clusters,

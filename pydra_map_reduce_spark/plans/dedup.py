@@ -147,6 +147,18 @@ def _ngram_pair_ctes(threshold: float, max_df: int, *, recursive: bool = False) 
     )"""
 
 
+# The n-gram index (n=3) of the fixture corpus, its document frequency
+# carried uncapped: ngram_jaccard_neardup, ngram_jaccard_capped,
+# containment_neardup and _cluster_labels each apply their own max_df
+# to this one entry. The key leaves max_df out on purpose: a miss
+# releases the builder's entries for the same dir with another key, so
+# a per-cap key would rebuild at every switch between max_df=5 and 100.
+@session_cached("documents")
+def _ngram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load_table(spark, sf_dir, "documents")
+    return materialize(ops.ngram_index(d, "doc_id", "text", 3), CORPUS)
+
+
 @query(
     "ngram_jaccard_neardup",
     oracle=_ngram_pair_ctes(0.03, 100) + """
@@ -165,9 +177,7 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     failing the differential). The dedicated `ngram_jaccard_capped`
     query (max_df=5, which DOES prune at every SF) certifies the cap
     path's pruning behavior itself."""
-    return ops.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.03
-    )
+    return ops.index_jaccard_pairs(_ngram_index(spark, sf_dir), 0.03, max_df=100)
 
 
 @query(
@@ -183,14 +193,11 @@ def ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     are dropped before the inverted-index self-join, bounding every
     posting-list bucket (the uncapped operator is quadratic in one
     bucket the moment a stop-shingle spans the corpus — see
-    operators/dedup.py ngram_jaccard_pairs_capped for the work-bound
+    operators/dedup.py ngram_jaccard_pairs for the work-bound
     argument). Jaccard is computed over the capped shingle sets in
     both engine and oracle; max_df=5 prunes real shingles at every
     fixture SF (sf0.01's df distribution tops out at 7)."""
-    return ops.ngram_jaccard_pairs_capped(
-        load_table(spark, sf_dir, "documents"),
-        "doc_id", "text", n=3, threshold=0.03, max_df=5,
-    )
+    return ops.index_jaccard_pairs(_ngram_index(spark, sf_dir), 0.03, max_df=5)
 
 
 @query(
@@ -219,10 +226,7 @@ def containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracles. Threshold 0.5 sits in a wide value gap at every fixture
     SF (nearest scores: 0.375 below, 1.0 above), so the raw-ratio cut
     cannot straddle an engine rounding boundary."""
-    return ops.containment_pairs(
-        load_table(spark, sf_dir, "documents"),
-        "doc_id", "text", n=3, threshold=0.5, max_df=100,
-    )
+    return ops.index_containment_pairs(_ngram_index(spark, sf_dir), 0.5, max_df=100)
 
 
 def _minhash_sigs_ctes(n_hashes: int = 32, p: int = 4_294_967_311) -> str:
@@ -322,13 +326,8 @@ def minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Session-cached (shingles, signatures, band-candidates) for the
 # xxhash64 PRODUCTION pipeline (32 hashes / 8 bands,
 # threshold-independent) — the _portable_sigs_cand pattern on the other
-# shingle identity. Built on plans IDENTICAL to minhash_lsh_pairs'
-# internal subtrees, so CacheManager substitutes the persisted frames
-# into the operator's pipeline without touching the operator. The
-# shingle frame is part of the entry: untracked, a fixture regeneration
-# left the stale persisted sh pinned forever AND let CacheManager
-# substitute it under the freshly keyed sigs/cand rebuild (r14 ADVICE,
-# medium).
+# shingle identity. minhash_lsh_neardup rescores sh and cand; the three
+# frames are one entry, so one LRU position and one release cover them.
 @session_cached("documents")
 def _xxhash_sigs_cand(
     spark: SparkSession, sf_dir: str
@@ -341,9 +340,6 @@ def _xxhash_sigs_cand(
     )
 
     d = load_table(spark, sf_dir, "documents")
-    # EXACT plan twin of minhash_lsh_pairs' internal sh_rows (same
-    # _spread, same defaults) — the .persist here and the operator's
-    # dedup to one CacheManager entry
     sh = materialize(shingle_rows(_spread(d), "doc_id", "text"), CORPUS)
     sigs = materialize(minhash_signatures(sh, 32), CORPUS)
     cand = materialize(minhash_band_candidates(sigs, 32, 8), CORPUS)
@@ -357,20 +353,10 @@ def _xxhash_sigs_cand(
     section="2.11 near-dedup: MinHash + LSH banding + exact rescore",
 )
 def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pre-pin the xxhash signature/candidate frames (WP2's portable
-    # pattern applied to the production path): the operator's own
-    # plan-equal sigs/cand subtrees read the session-cached entries
-    # via CacheManager substitution, so warm calls skip the
-    # 32-min-agg signature build and the explode+self-join banding
-    _xxhash_sigs_cand(spark, sf_dir)
-    return ops.minhash_lsh_pairs(
-        load_table(spark, sf_dir, "documents"),
-        "doc_id",
-        "text",
-        n_hashes=32,
-        bands=8,
-        threshold=0.8,
-    )
+    # warm calls skip the 32-min-agg signature build and the
+    # explode+self-join banding
+    sh, _, cand = _xxhash_sigs_cand(spark, sf_dir)
+    return ops.minhash_rescore(sh, cand, 0.8)
 
 
 @query(
@@ -700,9 +686,7 @@ _LSH_EVAL_THRESHOLD = 0.05  # deliberately BELOW the banding design point
 # index (portable_shingle_ids over the spread corpus) and each paid the
 # full ~3.5 s (sf0.1) build per call because the per-call persist/
 # unpersist pair released exactly what the next evaluator was about to
-# rebuild. (The xxhash64 PRODUCTION path is untouched — its
-# index plan differs, so CacheManager sharing never applied across the
-# two families.)
+# rebuild.
 @session_cached("documents")
 def _portable_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import _spread, portable_shingle_ids
@@ -721,11 +705,9 @@ def _portable_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aliases) and the candidate frame twice, so every call re-ran the
 # 32-min-agg signature build and the explode+self-join banding
 # repeatedly (guide §1.3 duplicated-subtree smell). Persisting both
-# once per (app, dir, fixture) collapses all of it; CacheManager
-# plan-dedup additionally substitutes these entries into
-# minhash_lsh_pairs(portable_hash=True)'s identical sigs/cand
-# subtrees (lsh_recall's found side, dedup_clusters_minhash) and into
-# lsh_band_sweep's shared sigs scan.
+# once per (app, dir, fixture) collapses all of it. cand is also what
+# _minhash_portable_pairs and lsh_recall's found side rescore, and sigs
+# is lsh_band_sweep's shared sigs scan.
 @session_cached("documents")
 def _portable_sigs_cand(
     spark: SparkSession, sf_dir: str
@@ -804,10 +786,10 @@ def lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     true hit-rate (the ann_recall convention). All counts are exact
     integers; recall divides them once, floored identically.
     """
-    d = load_table(spark, sf_dir, "documents")
     # the session-cached portable index: the truth side references it
-    # in FOUR subplan instances (inter's two aliases, sizes twice),
-    # and minhash_estimate_error reads the same build
+    # in FOUR subplan instances (inter's two aliases, sizes twice), the
+    # found side rescores over it, and minhash_estimate_error reads the
+    # same build
     sh = _portable_shingle_index(spark, sf_dir)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
@@ -826,13 +808,8 @@ def lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     truth = jac.filter(F.col("j") >= _LSH_EVAL_THRESHOLD).select("doc_a", "doc_b")
-    # pre-pin the shared portable sigs/cand so the pipeline below hits
-    # them regardless of which family member runs first in a session
-    _portable_sigs_cand(spark, sf_dir)
-    found = ops.minhash_lsh_pairs(
-        d, "doc_id", "text",
-        threshold=_LSH_EVAL_THRESHOLD, n_hashes=32, bands=8, portable_hash=True,
-    ).select("doc_a", "doc_b")
+    _, cand = _portable_sigs_cand(spark, sf_dir)
+    found = ops.minhash_rescore(sh, cand, _LSH_EVAL_THRESHOLD).select("doc_a", "doc_b")
     # ONE pass for all three counts (guide §1.3 duplicated-subtree
     # smell): the old three-aggregate form (count(truth),
     # count(found), count(found⋈truth)) evaluated the quadratic
@@ -852,9 +829,8 @@ def lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("in_f").alias("n_found"),
         F.count(F.when(F.col("in_t").isNotNull() & F.col("in_f").isNotNull(), 1)).alias("n_hits"),
     )
-    # the index stays persisted (session cache — see
-    # _portable_shingle_index); the one-row report still checkpoints
-    # so the wide truth lineage isn't replayed by downstream readers
+    # the one-row report is materialized so the wide truth lineage
+    # isn't replayed by downstream readers
     return materialize(counts.select(
         F.col("n_true").cast("bigint").alias("n_true"),
         F.col("n_found").cast("bigint").alias("n_found"),
@@ -964,22 +940,22 @@ _DUP_WINDOW_CTES = f"""toks AS (
     )"""
 
 
-def _dup_window_frames(d: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(toks, dp): the tokenized corpus with 0-based positions, and the
-    duplicated-window start positions. Spark twin of _DUP_WINDOW_CTES.
+def _dup_tokens(d: DataFrame) -> DataFrame:
+    """toks(doc_id, pos, w): the tokenized corpus with 0-based
+    positions, the `toks` CTE of _DUP_WINDOW_CTES."""
+    return d.select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w"))
 
-    dp comes back PERSISTED (narrow: two bigints per duplicated
-    window, no unpersist): the detect half (duplicate_spans) and the
-    remove half (span_scrub) build the identical gram→md5→≥2-docs
-    subtree, so CacheManager's plan-dedup serves the second query from
-    the first's materialization instead of re-running the windowed
-    gram pass — the _capped_pair_counts lifecycle rationale, same
-    bounded, evictable pinning."""
+
+# dp(doc_id, pos): the duplicated-window start positions, Spark twin of
+# _DUP_WINDOW_CTES. Session-cached (narrow: two bigints per duplicated
+# window): the detect half (duplicate_spans) and the remove half
+# (span_scrub) both read it, so the second query does not re-run the
+# windowed gram pass.
+@session_cached("documents")
+def _dup_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    toks = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w")
-    )
+    toks = _dup_tokens(load_table(spark, sf_dir, "documents"))
     win = Window.partitionBy("doc_id").orderBy("pos")
     gram = toks.select(
         "doc_id",
@@ -1002,12 +978,7 @@ def _dup_window_frames(d: DataFrame) -> tuple[DataFrame, DataFrame]:
         .filter(F.col("nd") >= 2)
         .select("s")
     )
-    dp = materialize(
-        gid.join(dup, "s", "left_semi")
-        .select("doc_id", "pos"),
-        CORPUS,
-    )
-    return toks, dp
+    return materialize(gid.join(dup, "s", "left_semi").select("doc_id", "pos"), CORPUS)
 
 
 @query(
@@ -1039,7 +1010,7 @@ def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedded in otherwise-unique pages; this is the operator that
     finds it, and its spans are exactly what `span_scrub` removes.
     Anchors are rolling W=4 token windows (md5-prefix ids, the
-    portable shingle identity, built once in _dup_window_frames /
+    portable shingle identity, built once in _dup_windows /
     _DUP_WINDOW_CTES for both this query and the scrubber); a window
     is duplicated iff its gram occurs in >= 2 DISTINCT documents
     (within-doc repetition is repetition_ratio's business, not
@@ -1056,8 +1027,7 @@ def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    d = load_table(spark, sf_dir, "documents")
-    _, dp = _dup_window_frames(d)
+    dp = _dup_windows(spark, sf_dir)
     win = Window.partitionBy("doc_id").orderBy("pos")
     isl = dp.withColumn("grp", F.col("pos") - F.row_number().over(win))
     return (
@@ -1110,7 +1080,7 @@ def span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REMOVAL half of the ExactSubstr pipeline: drop every token
     covered by a cross-document duplicated window (the positions
     `duplicate_spans` reports, regenerated from the shared
-    _dup_window_frames definition so the two queries cannot drift)
+    _dup_windows definition so the two queries cannot drift)
     and reassemble each document from its surviving tokens in order.
     The per-source report certifies CONTENT, not just counts:
     `scrub_checksum` is an order-free BIGINT sum of the md5 prefix of
@@ -1128,7 +1098,7 @@ def span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum, identically in both engines.
     """
     d = load_table(spark, sf_dir, "documents")
-    toks, dp = _dup_window_frames(d)
+    toks, dp = _dup_tokens(d), _dup_windows(spark, sf_dir)
     drop_pos = (
         dp.select(
             "doc_id",
@@ -1190,13 +1160,10 @@ def span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # certifying the MACHINERY, not the cache.
 @session_cached("documents")
 def _minhash_portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pre-pin the shared portable sigs/cand (see lsh_recall note)
-    _portable_sigs_cand(spark, sf_dir)
-    return materialize(ops.minhash_lsh_pairs(
-        load_table(spark, sf_dir, "documents"),
-        "doc_id", "text", n_hashes=32, bands=8,
-        threshold=0.8, portable_hash=True,
-    ), CORPUS)
+    _, cand = _portable_sigs_cand(spark, sf_dir)
+    return materialize(
+        ops.minhash_rescore(_portable_shingle_index(spark, sf_dir), cand, 0.8), CORPUS
+    )
 
 
 # Labels of the iterative min-label CC over the cached portable pair
@@ -1215,16 +1182,11 @@ def _minhash_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 # labels — the dedup analogue of vectors._ivf_index: clustering is
 # deterministic (exact pair graph + min-label CC), so serve-many
 # consumers read one materialized label frame instead of re-running
-# the iterative CC per call. The PARITY queries (dedup_clusters_exact,
-# dedup_cluster_stats) stay recompute-per-call, exactly like
-# ivf_ann_topk_distributed trains per call while ivf_ann_serve serves
-# from the cache.
+# the iterative CC per call (dedup_clusters_exact, dedup_cluster_stats,
+# dedup_best_quality).
 @session_cached("documents")
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    pairs = ops.ngram_jaccard_pairs(
-        d, "doc_id", "text", n=3, threshold=0.2
-    ).select("doc_a", "doc_b")
+    pairs = ops.index_jaccard_pairs(_ngram_index(spark, sf_dir), 0.2, max_df=100)
     # dedup_clusters already localCheckpoints its fixpoint, so the
     # returned frame is executor-side state with no CC lineage
     return ops.dedup_clusters(pairs)
@@ -1409,7 +1371,7 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     plagiarism/copy detection sublinear in corpus size. Per-doc report
     (selection counts and span) keeps the terminal row count bounded.
 
-    Plan shape: tokenize -> lead-window k-grams (the _dup_window_frames
+    Plan shape: tokenize -> lead-window k-grams (the _dup_windows
     machinery shape) -> md5-prefix portable hash -> each gram explodes
     into the <=w windows containing it (sequence/explode: work is
     exactly w rows per gram, linear, never a range join) -> per-window
@@ -1580,11 +1542,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the mirrored left join + coalesce. Plan: the small distinct
     candidate frame broadcasts onto the signature/size/intersection
     frames; the shingle index is the SESSION-CACHED
-    _portable_shingle_index shared with lsh_recall — do NOT unpersist
-    the returned frame (releasing it evicts the shared cache's
-    storage out from under every later evaluator call; the per-call
-    persist/release pair this replaced rebuilt the ~3.5 s index each
-    time)."""
+    _portable_shingle_index shared with lsh_recall."""
     sh = _portable_shingle_index(spark, sf_dir)
     # sigs/cand from the session cache (see _portable_sigs_cand):
     # this plan references sigs four times and cand twice, and the
@@ -1799,9 +1757,10 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     this diagnostic over a document SAMPLE (the ann_recall
     sample-the-queries posture), not the full corpus; it prices a
     threshold, it doesn't dedup."""
-    from ..operators.dedup import minhash_band_candidates, minhash_signatures
+    from ..operators.dedup import minhash_band_candidates
 
     sh = _portable_shingle_index(spark, sf_dir)
+    sigs, _ = _portable_sigs_cand(spark, sf_dir)
     # Materialize the rows=1 candidate frame ONCE (it feeds both the
     # intersection rescore and the jac join below — without this the
     # whole signature/banding lineage executes twice), and let AQE
@@ -1810,7 +1769,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # could exceed executor/driver memory at larger SFs even under
     # the documented sample-the-corpus posture.
     cand = materialize(
-        minhash_band_candidates(minhash_signatures(sh, 32), 32, _SWEEP_BANDS)
+        minhash_band_candidates(sigs, 32, _SWEEP_BANDS)
         .select("doc_a", "doc_b"),
         CORPUS,
     )
@@ -2076,17 +2035,16 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-call rebuild + localCheckpoint of an identical frame); each
     banding is the production minhash_band_candidates definition, so
     candidate sets — not a re-typed approximation — are what's
-    counted (the 8-band config's plan is the cached candidate frame
-    itself, which CacheManager substitutes). Counts only, never
-    materialized pair lists, so even the (32,1) funnel is one
-    keyed-agg pass; at corpus scale the same sample-the-corpus
-    posture as dedup_threshold_sweep applies."""
+    counted (the 8-band config reads the cached candidate frame
+    itself). Counts only, never materialized pair lists, so even the
+    (32,1) funnel is one keyed-agg pass; at corpus scale the same
+    sample-the-corpus posture as dedup_threshold_sweep applies."""
     from ..operators.dedup import minhash_band_candidates
 
-    sigs, _ = _portable_sigs_cand(spark, sf_dir)
+    sigs, cand8 = _portable_sigs_cand(spark, sf_dir)
     parts = []
     for bands, rows in _BAND_CONFIGS:
-        cand = minhash_band_candidates(sigs, 32, bands)
+        cand = cand8 if bands == 8 else minhash_band_candidates(sigs, 32, bands)
         parts.append(
             cand.agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_cand_pairs"),

@@ -2,6 +2,11 @@
 to every query that needs it (a shingle index, a trained IVF index,
 model tables).
 
+A session cache is the only way a frame is shared between calls. A
+consumer reads the cached value itself; no plan relies on Spark's
+CacheManager matching its plan to a frame another call stored, and no
+plan calls a builder only for its side effect.
+
 ``@session_cached("documents", ...)`` wraps a builder
 ``build(spark, sf_dir, *args)`` and owns the whole lifecycle:
 

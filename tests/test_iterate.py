@@ -16,32 +16,11 @@ from pydra_map_reduce_spark import session_cache as SC
 from pydra_map_reduce_spark.iterate import checkpointed_rounds
 from pydra_map_reduce_spark.operators import dedup as ops
 from pydra_map_reduce_spark.plans import REGISTRY
-from pydra_map_reduce_spark.plans.dedup import _minhash_portable_pairs
 from pydra_map_reduce_spark.session_cache import session_cached
 
-from .conftest import SF_DIR, stored_rdds
+from .conftest import SF_DIR, held_by_session_caches, reads, stored_rdds
 
 _SF0001_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
-
-
-def _reads(df) -> set[int]:
-    return {r.id() for r in SC._checkpoint_rdds(df)}
-
-
-def _held_by_session_caches(spark) -> set[int]:
-    """The RDDs session-cache entries hold: the checkpoints their frames
-    read and the cached buffers of their persisted frames."""
-    cache = spark._jsparkSession.sharedState().cacheManager()
-    ids = set()
-    for entry in SC._ENTRIES.values():
-        ids |= _reads(entry.value)
-        for df in SC._frames(entry.value):
-            cached = cache.lookupCachedData(df._jdf)
-            if cached.isDefined():
-                builder = cached.get().cachedRepresentation().cacheBuilder()
-                if builder.isCachedColumnBuffersLoaded():
-                    ids.add(builder.cachedColumnBuffers().id())
-    return ids
 
 
 def _inc(df, _r):
@@ -60,7 +39,7 @@ def test_only_the_last_round_stays_stored(spark):
         # the round a state was computed from is still readable here
         assert _ids(state) == [i + 1 for i in _ids(prev)]
         prev = state
-    assert stored_rdds(spark) - base == _reads(state)
+    assert stored_rdds(spark) - base == reads(state)
     assert _ids(state) == list(range(5, 15))
 
 
@@ -69,7 +48,7 @@ def test_break_keeps_only_the_round_it_left_at(spark):
     for r, state in enumerate(checkpointed_rounds(spark.range(10), _inc, 5), 1):
         if r == 2:
             break
-    assert stored_rdds(spark) - base == _reads(state)
+    assert stored_rdds(spark) - base == reads(state)
     assert _ids(state) == list(range(2, 12))
 
 
@@ -103,7 +82,7 @@ def test_seed_over_a_session_cache_keeps_its_blocks(spark, tmp_path):
         for state in checkpointed_rounds(seed, _inc, 3):
             pass
         SC.release(state)
-        assert _reads(cached) <= stored_rdds(spark)
+        assert reads(cached) <= stored_rdds(spark)
         sc = spark.sparkContext
         sc.setJobGroup("rounds-seed-hit", "cache hit after rounds")
         try:
@@ -132,15 +111,10 @@ def test_seed_over_a_session_cache_keeps_its_blocks(spark, tmp_path):
 def test_kernel_leaves_no_superseded_round_stored(spark, name):
     """Every RDD a call adds to storage is read by its returned frame or
     held by a session-cache entry."""
-    if name == "dedup_clusters_star":
-        # a cold build of its pair cache leaves minhash_lsh_pairs'
-        # internal cand stored, and no caller releases it: compute the
-        # cache first, so only the rounds are measured
-        _minhash_portable_pairs(spark, _SF0001_DIR).count()
     base = stored_rdds(spark)
     df = REGISTRY[name].fn(spark, _SF0001_DIR)
     assert df.collect()
-    left = stored_rdds(spark) - base - _reads(df) - _held_by_session_caches(spark)
+    left = stored_rdds(spark) - base - reads(df) - held_by_session_caches(spark)
     assert not left, f"{name} left {len(left)} superseded RDD(s) stored"
 
 

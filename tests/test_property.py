@@ -685,10 +685,9 @@ def test_span_scrub_removes_every_duplicated_window(spark):
     from pyspark.sql import functions as F
 
     from pydra_map_reduce_spark.plans import REGISTRY
-    from pydra_map_reduce_spark.plans.dedup import _SPAN_W, _dup_window_frames
+    from pydra_map_reduce_spark.plans.dedup import _SPAN_W, _dup_windows
 
-    d = load_table(spark, SF_DIR, "documents")
-    toks, dp = _dup_window_frames(d)
+    dp = _dup_windows(spark, SF_DIR)
     covered = (
         dp.select(
             "doc_id",
@@ -711,14 +710,14 @@ def test_containment_asymmetry_and_direction(spark):
     from pydra_map_reduce_spark.operators.dedup import (
         _capped_pair_counts,
         containment_pairs,
+        ngram_index,
     )
 
     d = load_table(spark, SF_DIR, "documents")
     pairs = containment_pairs(d, "doc_id", "text", threshold=0.5).collect()
     assert pairs, "fixture must produce containment pairs at every SF"
-    _, sizes, idx = _capped_pair_counts(d, "doc_id", "text", 3, 100)
+    _, sizes = _capped_pair_counts(ngram_index(d, "doc_id", "text", 3), 100)
     n_by_doc = {r["doc_id"]: r["n"] for r in sizes.collect()}
-    idx.unpersist()
     for r in pairs:
         assert 0.5 <= r["containment"] <= 1.0
         assert n_by_doc[r["contained_id"]] <= n_by_doc[r["container_id"]]

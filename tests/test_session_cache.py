@@ -17,7 +17,7 @@ from pydra_map_reduce_spark import session_cache as SC
 from pydra_map_reduce_spark.plans import REGISTRY
 from pydra_map_reduce_spark.session_cache import session_cached
 
-from .conftest import SF_DIR, stored_rdds
+from .conftest import SF_DIR, held_by_session_caches, reads, stored_rdds
 
 _BUILDS: list[str] = []
 
@@ -210,10 +210,10 @@ def test_regenerated_fixture_returns_storage_to_baseline(spark, tmp_path):
 
 
 def test_rewritten_fixture_is_not_served_from_a_stale_persist(spark, tmp_path):
-    """``_capped_pair_counts`` persists its n-gram index and no session
-    cache releases it. A fixture rewritten at the same path must not be
-    served from that entry: the next load refreshes the path, and the
-    query matches the oracle on the new file."""
+    """A fixture rewritten at the same path is not served from the frames
+    stored from the old file: the session-cached n-gram index is
+    rebuilt under the new fixture key, and the query matches the oracle
+    on the new file."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -247,6 +247,37 @@ def test_rewritten_fixture_is_not_served_from_a_stale_persist(spark, tmp_path):
     con.close()
     assert new != old
     assert spark_rows() == new
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ngram_jaccard_neardup",
+        "ngram_jaccard_capped",
+        "containment_neardup",
+        "dedup_cluster_stats",
+        "minhash_lsh_neardup",
+        "minhash_lsh_portable",
+        "lsh_recall",
+        "duplicate_spans",
+        "span_scrub",
+    ],
+)
+def test_dedup_query_stores_only_session_cached_frames(spark, name):
+    """A cold call, then a warm one: every RDD a dedup query adds to
+    storage is read by a frame it returned or held by a session cache,
+    so no frame stays stored that only Spark's CacheManager holds."""
+    d = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+    dedup = "pydra_map_reduce_spark.plans.dedup."
+    for k in [k for k in SC._ENTRIES if k[0].startswith(dedup) and k[2] == d]:
+        SC.release(SC._ENTRIES.pop(k).value)
+    base, returned = stored_rdds(spark), set()
+    for call in ("cold", "warm"):
+        df = REGISTRY[name].fn(spark, d)
+        assert df.collect()
+        returned |= reads(df)
+        left = stored_rdds(spark) - base - returned - held_by_session_caches(spark)
+        assert not left, f"{call} {name} left {len(left)} RDD(s) no session cache holds"
 
 
 def test_streaming_late_drop_leaves_no_temp_dir(spark, tmp_path, monkeypatch):

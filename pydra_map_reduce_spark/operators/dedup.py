@@ -7,6 +7,9 @@ chunk); only candidates are rescored exactly.
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -200,6 +203,29 @@ def ngram_index(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFr
     return ex.join(dfreq, "s").select("doc_id", "s", "df")
 
 
+def bucket_pairs(rows: DataFrame, id_col: str, keys: str | list[str]) -> DataFrame:
+    """(id_a, id_b, n): each pair of ``id_col`` values with id_a < id_b
+    that share at least one bucket (rows with equal ``keys``), and n,
+    the number of buckets they share — the candidate-pair self-join of
+    every inverted-index operator (shingle postings, LSH bands, baskets,
+    co-occurrence). One join on the keys, one count keyed on the pair.
+
+    ``rows`` holds each (id, bucket) once; a repeated row is counted
+    again. A null key or id pairs with nothing. Work is Σ|bucket|², so
+    a caller bounds its buckets first (the ``max_df`` cap). A consumer
+    that needs only the pairs selects (id_a, id_b): Catalyst prunes the
+    count, and the plan is the one ``distinct()`` gives."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    a, b = rows.alias("a"), rows.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    return (
+        a.join(b, functools.reduce(operator.and_, on))
+        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
 def _capped_pair_counts(
     index: DataFrame, max_df: int | None
 ) -> tuple[DataFrame, DataFrame]:
@@ -213,11 +239,8 @@ def _capped_pair_counts(
     ex = index if max_df is None else index.filter(F.col("df") <= max_df)
     ex = ex.select("doc_id", "s")
     sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).cast("int").alias("n"))
-    a, b = ex.alias("a"), ex.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+    inter = bucket_pairs(ex, "doc_id", "s").select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), F.col("n").alias("n_inter")
     )
     return inter, sizes
 
@@ -254,10 +277,10 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) for pairs sharing ≥1 n-gram shingle.
 
-    The shared-shingle equi-join count IS the intersection size
-    (shingle arrays are distinct), so no per-pair array math; work is
-    Σ_bucket |bucket|², not n². Shingles join on xxhash64 ids (cheaper
-    shuffle than strings, collision-free in practice).
+    The shared-shingle count of :func:`bucket_pairs` IS the
+    intersection size (shingle sets are distinct), so no per-pair
+    array math. Shingles join on xxhash64 ids (cheaper shuffle than
+    strings, collision-free in practice).
 
     ``max_df`` (DEFAULT-ON at 100) is the document-frequency ceiling:
     shingles appearing in more than max_df documents are dropped
@@ -391,16 +414,8 @@ def minhash_band_candidates(
     bnd = sigs.select("doc_id", F.explode(F.array(*band_structs)).alias("bs")).select(
         "doc_id", "bs.band", "bs.sig"
     )
-    a, b = bnd.alias("a"), bnd.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+    return bucket_pairs(bnd, "doc_id", ["band", "sig"]).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..iterate import checkpointed_rounds
 from ..session_cache import CORPUS, SMALL, materialize
+from .dedup import bucket_pairs
 from .textops import (
     round_half_up,
     signed_round_half_up,
@@ -232,8 +233,8 @@ def lsh_allpairs_cosine(
     """All-pairs cosine ≥ threshold with a banded-LSH candidate
     generator: random-hyperplane sign bits → (band, sig) equi-join →
     exact flat-column rescore. Same output contract as
-    :func:`allpairs_cosine`, but the generator is an equi-join (never a
-    cartesian/theta self-join), so candidate work is Σ_bucket |bucket|².
+    :func:`allpairs_cosine`, but the generator is an equi-join
+    (:func:`~.dedup.bucket_pairs`), never a cartesian/theta self-join.
 
     Recall math: a pair at angle θ agrees with one hyperplane with
     p = 1 − θ/π; it escapes every band with (1 − p^r)^b. At the
@@ -282,16 +283,8 @@ def lsh_allpairs_cosine(
         .select("vid", F.explode(F.array(*band_structs)).alias("bs"))
         .select("vid", "bs.band", "bs.sig")
     )
-    l, r_ = bnd.alias("l"), bnd.alias("r")
-    cand = (
-        l.join(
-            r_,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.sig") == F.col("r.sig"))
-            & (F.col("l.vid") < F.col("r.vid")),
-        )
-        .select(F.col("l.vid").alias("cand_a"), F.col("r.vid").alias("cand_b"))
-        .distinct()
+    cand = bucket_pairs(bnd, "vid", ["band", "sig"]).select(
+        F.col("id_a").alias("cand_a"), F.col("id_b").alias("cand_b")
     )
     fa = _flatten(df, id_col, vec_col, dim, "a")
     fb = _flatten(df, id_col, vec_col, dim, "b", check=False)

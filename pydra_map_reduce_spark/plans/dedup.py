@@ -323,15 +323,16 @@ def minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_portable_pairs(spark, sf_dir)
 
 
-# Session-cached (shingles, signatures, band-candidates) for the
-# xxhash64 PRODUCTION pipeline (32 hashes / 8 bands,
-# threshold-independent) — the _portable_sigs_cand pattern on the other
-# shingle identity. minhash_lsh_neardup rescores sh and cand; the three
-# frames are one entry, so one LRU position and one release cover them.
+# Session-cached (shingles, band-candidates) for the xxhash64
+# PRODUCTION pipeline (32 hashes / 8 bands, threshold-independent) —
+# the _portable_sigs_cand pattern on the other shingle identity.
+# minhash_lsh_neardup rescores sh and cand; the two frames are one
+# entry, so one LRU position and one release cover them. The
+# signatures are not stored: only the candidate build reads them.
 @session_cached("documents")
-def _xxhash_sigs_cand(
+def _xxhash_shingles_cand(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame]:
     from ..operators.dedup import (
         _spread,
         minhash_band_candidates,
@@ -341,9 +342,9 @@ def _xxhash_sigs_cand(
 
     d = load_table(spark, sf_dir, "documents")
     sh = materialize(shingle_rows(_spread(d), "doc_id", "text"), CORPUS)
-    sigs = materialize(minhash_signatures(sh, 32), CORPUS)
+    sigs = minhash_signatures(sh, 32)
     cand = materialize(minhash_band_candidates(sigs, 32, 8), CORPUS)
-    return sh, sigs, cand
+    return sh, cand
 
 
 @query(
@@ -355,7 +356,7 @@ def _xxhash_sigs_cand(
 def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # warm calls skip the 32-min-agg signature build and the
     # explode+self-join banding
-    sh, _, cand = _xxhash_sigs_cand(spark, sf_dir)
+    sh, cand = _xxhash_shingles_cand(spark, sf_dir)
     return ops.minhash_rescore(sh, cand, 0.8)
 
 
@@ -768,9 +769,9 @@ def lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     VISIBLE in the report — recall near 1.0 would only certify the
     easy regime; a team tunes bands/rows against exactly this number.
 
-    Plan: truth is the posting-list self-join (quadratic in list
-    length — the evaluation pays for its ground truth). The truth
-    side is deliberately UNCAPPED (exact recall w.r.t. full truth),
+    Plan: truth is the exact n-gram Jaccard of
+    operators/dedup.index_jaccard_pairs, deliberately UNCAPPED
+    (``max_df=None``: exact recall w.r.t. full truth),
     unlike the production pipeline's df-capped posting lists: a
     capped truth would only certify the pairs the pipeline could
     possibly find. At real scale you keep truth exact but SAMPLE the
@@ -787,27 +788,13 @@ def lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers; recall divides them once, floored identically.
     """
     # the session-cached portable index: the truth side references it
-    # in FOUR subplan instances (inter's two aliases, sizes twice), the
-    # found side rescores over it, and minhash_estimate_error reads the
-    # same build
+    # in FOUR subplan instances (the pair join's two sides, sizes
+    # twice), the found side rescores over it, and
+    # minhash_estimate_error reads the same build
     sh = _portable_shingle_index(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+    truth = ops.index_jaccard_pairs(sh, _LSH_EVAL_THRESHOLD, max_df=None).select(
+        "doc_a", "doc_b"
     )
-    jac = (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("n_inter").cast("double") / (F.col("na") + F.col("nb") - F.col("n_inter"))).alias("j"),
-        )
-    )
-    truth = jac.filter(F.col("j") >= _LSH_EVAL_THRESHOLD).select("doc_a", "doc_b")
     _, cand = _portable_sigs_cand(spark, sf_dir)
     found = ops.minhash_rescore(sh, cand, _LSH_EVAL_THRESHOLD).select("doc_a", "doc_b")
     # ONE pass for all three counts (guide §1.3 duplicated-subtree
@@ -1473,8 +1460,8 @@ def winnowing_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-prefix collisions and incidental single-gram matches).
 
     Plan: the winnowing_fingerprint selection (shared constants, same
-    windowed stages) reduced to per-doc distinct hashes, then an
-    equi-self-join + keyed count — the inverted-index shape with a
+    windowed stages) reduced to per-doc distinct hashes, then
+    :func:`bucket_pairs` on the hash — the inverted-index shape with a
     sketch-sized posting list. At 100 TB add a df-cap on hot
     fingerprints exactly like the shingle index's (a boilerplate
     fingerprint has the same unbounded-bucket hazard at lower mass).
@@ -1484,11 +1471,13 @@ def winnowing_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "h")
         .distinct()
     )
-    a, b = fph.alias("a"), fph.alias("b")
     return (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
+        ops.bucket_pairs(fph, "doc_id", "h")
+        .select(
+            F.col("id_a").alias("doc_a"),
+            F.col("id_b").alias("doc_b"),
+            F.col("n").alias("n_shared"),
+        )
         .filter(F.col("n_shared") >= _WINNOW_MIN_SHARED)
     )
 

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..iterate import checkpointed_rounds
 from ..operators import graph as graph_ops
+from ..operators.dedup import bucket_pairs
 from ..session_cache import CORPUS, SMALL, WIDE, materialize, release, session_cached
 from ..sources.tables import load_table
 from .registry import query
@@ -462,32 +463,19 @@ def link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey")
         .filter(F.col("l_partkey") < 300)
     )
-    a, b = li.alias("a"), li.alias("b")
     e = materialize(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct(),
+        bucket_pairs(li, "l_partkey", "l_orderkey").select(
+            F.col("id_a").alias("u"), F.col("id_b").alias("v")
+        ),
         CORPUS,
     )  # consumed by nbr (x2) + the anti-join
     nbr = e.select(F.col("u").alias("node"), F.col("v").alias("nb")).unionAll(
         e.select(F.col("v").alias("node"), F.col("u").alias("nb"))
     )
     deg = nbr.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
-    na, nb_ = nbr.alias("na"), nbr.alias("nb2")
-    wedge = (
-        na.join(
-            nb_,
-            (F.col("na.nb") == F.col("nb2.nb"))
-            & (F.col("na.node") < F.col("nb2.node")),
-        )
-        .groupBy(
-            F.col("na.node").alias("x"), F.col("nb2.node").alias("y")
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
+    # wedges: node pairs with a common neighbor as the bucket
+    wedge = bucket_pairs(nbr, "node", "nb").select(
+        F.col("id_a").alias("x"), F.col("id_b").alias("y"), F.col("n").alias("common")
     )
     cand = wedge.join(
         e,

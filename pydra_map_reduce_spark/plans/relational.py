@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import bucket_pairs
 from ..operators.textops import cents, money_sum, round_half_up
 from ..session_cache import CORPUS, SMALL, WIDE, materialize, session_cached
 from ..sources.tables import load_table
@@ -1140,13 +1141,11 @@ def weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent-itemset mining at the pair level (the first Apriori
-    layer): part pairs co-occurring in ≥3 orders. Pairs generate via
-    the canonical-orientation self-join on the order key (p_a < p_b,
-    each pair once) — work is Σ per-order lines², bounded by basket
-    size, never corpus²; the support count is one keyed aggregation.
-    At 100 TB add a frequent-items prefilter (drop parts below
-    minimum item support before pairing — Apriori's monotonicity)
-    to shrink the join input.
+    layer): part pairs co-occurring in ≥3 orders. Pairs and their
+    support come from ``bucket_pairs`` with the order as the bucket
+    (p_a < p_b, each pair once). At 100 TB add a frequent-items
+    prefilter (drop parts below minimum item support before pairing —
+    Apriori's monotonicity) to shrink the join input.
 
     The basket is the DISTINCT (order, part) set: an order listing
     the same part on two lineitem rows is one occurrence of the item,
@@ -1160,17 +1159,11 @@ def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
-    a, b = li.alias("a"), li.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        bucket_pairs(li, "l_partkey", "l_orderkey")
+        .select(
+            F.col("id_a").alias("p_a"), F.col("id_b").alias("p_b"), F.col("n").alias("support")
         )
-        .groupBy(
-            F.col("a.l_partkey").alias("p_a"), F.col("b.l_partkey").alias("p_b")
-        )
-        .agg(F.count(F.lit(1)).alias("support"))
         .filter(F.col("support") >= 3)
     )
 

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..iterate import checkpointed_rounds
 from ..operators import textops
+from ..operators.dedup import bucket_pairs
 from ..operators.textops import round_half_up
 from ..session_cache import CORPUS, SMALL, materialize, session_cached
 from ..sources.tables import load_table
@@ -410,19 +411,17 @@ def _cooc_top20_sql(cnt_alias: str = "n") -> str:
 
 def _cooc_top20(d: DataFrame, cnt_alias: str = "n") -> DataFrame:
     """Spark twin of _cooc_top20_sql over the distinct (doc, word)
-    incidence: keyed per-doc self-join (work is sum over docs of
-    vocab(doc) squared, never corpus-n2; df-band at real scale),
+    incidence: word pairs with the document as the bucket
+    (``bucket_pairs``; df-band the vocabulary at real scale),
     TakeOrdered top-20."""
     dw = (
         d.select("doc_id", F.explode(textops.tokens("text")).alias("word"))
         .filter(F.col("word") != "")
         .distinct()
     )
-    a, b = dw.alias("a"), dw.alias("b")
     return (
-        a.join(b, (F.col("a.doc_id") == F.col("b.doc_id")) & (F.col("a.word") < F.col("b.word")))
-        .groupBy(F.col("a.word").alias("w1"), F.col("b.word").alias("w2"))
-        .agg(F.count(F.lit(1)).alias(cnt_alias))
+        bucket_pairs(dw, "word", "doc_id")
+        .select(F.col("id_a").alias("w1"), F.col("id_b").alias("w2"), F.col("n").alias(cnt_alias))
         .orderBy(F.col(cnt_alias).desc(), "w1", "w2")
         .limit(20)
     )
@@ -438,12 +437,11 @@ def _cooc_top20(d: DataFrame, cnt_alias: str = "n") -> DataFrame:
 )
 def word_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The classic MR 'pairs' co-occurrence job: distinct (doc, word)
-    → per-doc self-join (w1 < w2) → pair counts → top-20. The join is
-    keyed on doc_id, so work is Σ_doc |vocab(doc)|², never corpus-n².
-    At real corpus scale, band the vocabulary first (drop ultra-rare
-    and stopword-frequency terms by doc-frequency) — the standard
-    trick that keeps per-doc vocab, and hence the quadratic term,
-    bounded. Top-20 via TakeOrdered (per-partition heaps)."""
+    → per-doc pairs (w1 < w2) with counts → top-20. At real corpus
+    scale, band the vocabulary first (drop ultra-rare and
+    stopword-frequency terms by doc-frequency) — the standard trick
+    that keeps per-doc vocab, and hence each bucket, bounded. Top-20
+    via TakeOrdered (per-partition heaps)."""
     return _cooc_top20(load_table(spark, sf_dir, "documents"), "n")
 
 
@@ -1643,9 +1641,8 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     by). PMI = ln(P(a,b) / (P(a)P(b))) with document-frequency
     probabilities; computed on the top-20 pairs by co-count so the
     output is bounded and the tie order (n_co desc, w1, w2) is
-    pinned. Plan: the pair counts reuse word_cooccurrence's keyed
-    per-doc self-join (Σ_doc |vocab|², df-banded at real scale), the
-    df table is vocabulary-sized and broadcast, and the ln argument
+    pinned. Plan: the pair counts reuse word_cooccurrence's per-doc
+    pairs (_cooc_top20), the df table is vocabulary-sized and broadcast, and the ln argument
     is an exact integer ratio — both engines evaluate ln on the
     bit-identical double, with the signed 4dp half-up rendering
     absorbing libm ulps."""

@@ -840,14 +840,15 @@ def test_ivf_serve_reuses_trained_index(spark):
     assert a == b and len(a) == 5
 
 
-def test_xxhash_entry_pins_shingles_with_sigs_and_cand(spark):
-    """The xxhash shingle frame is part of the sigs/cand entry, so one
-    LRU position and one release cover all three pinned frames."""
-    from pydra_map_reduce_spark.plans.dedup import _xxhash_sigs_cand
+def test_xxhash_entry_pins_shingles_and_cand(spark):
+    """The xxhash entry holds the two frames minhash_lsh_neardup reads,
+    the shingles and the band candidates, so one LRU position and one
+    release cover both; the signatures are not stored."""
+    from pydra_map_reduce_spark.plans.dedup import _xxhash_shingles_cand
 
-    entry = _xxhash_sigs_cand(spark, SF_DIR)
-    assert len(entry) == 3 and all(df.is_cached for df in entry)
-    assert _xxhash_sigs_cand(spark, SF_DIR) is entry
+    entry = _xxhash_shingles_cand(spark, SF_DIR)
+    assert len(entry) == 2 and all(df.is_cached for df in entry)
+    assert _xxhash_shingles_cand(spark, SF_DIR) is entry
 
 
 def test_session_caches_use_the_one_helper():
@@ -1270,6 +1271,105 @@ def test_storage_goes_through_materialize():
     assert sites, "no materialize call found: the scan is stale"
     assert not raw, f"store through session_cache.materialize: {sorted(raw)}"
     assert not unclassed, f"materialize needs a size class by name: {sorted(unclassed)}"
+
+
+# Bucket self-join lint: ``operators.dedup.bucket_pairs`` is the one engine
+# function that orders the ids of two join sides. A function below still
+# compares two sides' columns itself, for the reason given.
+_ID_ORDER_ALLOWED = {
+    # payload: the chunk columns c0..c3 ride the band join into the
+    # hamming rescore, then the pairs are deduplicated
+    ("operators/dedup.py", "hamming_band_pairs"),
+    # not a join: compares the two set sizes to name the contained side
+    ("operators/dedup.py", "index_containment_pairs"),
+    # keyless: the exact all-pairs baseline lsh_allpairs_cosine must equal
+    ("operators/similarity.py", "allpairs_cosine"),
+    # payload: the vector columns ride the in-cell join into the cosine
+    ("operators/similarity.py", "semantic_dedup"),
+    # payload: p_name rides the (brand, size) block join into levenshtein
+    ("plans/joins.py", "fuzzy_blocked_join"),
+    # keyless: every pair of the p_partkey < 300 sample is the ground truth
+    ("plans/joins.py", "blocking_quality"),
+    # keyless: every pair of the same sample is scored
+    ("plans/joins.py", "fellegi_sunter_scores"),
+    # payload: the tf-idf weights ride the join into the dot product
+    ("plans/text.py", "tfidf_doc_similarity"),
+    # payload: per-source copy counts ride the join into sum(na * nb)
+    ("plans/dedup.py", "cross_source_dups"),
+    # payload: per-language bin probabilities ride the join into the divergence
+    ("plans/text.py", "lang_trigram_divergence"),
+}
+
+
+def _id_order_compares(tree):
+    """(function, line) of each ``F.col(x) < F.col(y)`` (or ``>``) whose
+    two columns are one name on two join sides: ``a.c`` and ``b.c``, or
+    a side suffix or prefix (``doc_a`` and ``doc_b``, ``aid`` and
+    ``bid``)."""
+    import ast
+
+    def col(node):
+        if (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "col"
+            and len(node.args) == 1
+            and isinstance(node.args[0], ast.Constant)
+            and isinstance(node.args[0].value, str)
+        ):
+            return node.args[0].value
+        return None
+
+    def two_sides(x, y):
+        xs, ys = x.split("."), y.split(".")
+        if len(xs) == len(ys) == 2:
+            return xs[1] == ys[1] and xs[0] != ys[0]
+        ends = {x[-2:], y[-2:]} == {"_a", "_b"} and x[:-2] == y[:-2]
+        starts = {x[:1], y[:1]} == {"a", "b"} and x[1:] == y[1:]
+        return ends or starts
+
+    hits = []
+
+    class Visitor(ast.NodeVisitor):
+        fn = ["<module>"]
+
+        def visit_FunctionDef(self, node):
+            self.fn.append(node.name)
+            self.generic_visit(node)
+            self.fn.pop()
+
+        def visit_Compare(self, node):
+            if len(node.ops) == 1 and isinstance(node.ops[0], (ast.Lt, ast.Gt)):
+                x, y = col(node.left), col(node.comparators[0])
+                if x and y and two_sides(x, y):
+                    hits.append((self.fn[-1], node.lineno))
+            self.generic_visit(node)
+
+    Visitor().visit(tree)
+    return hits
+
+
+def test_bucket_self_joins_go_through_bucket_pairs():
+    """No engine function but ``operators.dedup.bucket_pairs`` orders the
+    ids of a self-join (``a.id < b.id``) unless ``_ID_ORDER_ALLOWED``
+    names it with its reason; an allowlist entry that matches nothing
+    fails too, so the list cannot go stale."""
+    import ast
+    import glob
+
+    from pydra_map_reduce_spark import session_cache
+
+    root = _os.path.dirname(session_cache.__file__)
+    found = set()
+    bad = []
+    for path in glob.glob(_os.path.join(root, "**", "*.py"), recursive=True):
+        rel = _os.path.relpath(path, root)
+        for fn, line in _id_order_compares(ast.parse(open(path).read())):
+            found.add((rel, fn))
+            if (rel, fn) not in _ID_ORDER_ALLOWED:
+                bad.append(f"{rel}:{line} {fn}")
+    assert not bad, f"pair ids through operators.dedup.bucket_pairs: {sorted(bad)}"
+    stale = _ID_ORDER_ALLOWED - found
+    assert not stale, f"allowlist entries that match nothing: {sorted(stale)}"
 
 
 def test_no_session_cached_builder_called_for_its_side_effect():

@@ -9,6 +9,7 @@ hand-written queries don't reach.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -761,6 +762,62 @@ def test_hamming_band_pairs_complete_vs_bruteforce(spark):
 
     with _pytest.raises(ValueError, match="completeness bound"):
         hamming_band_pairs(sig, max_hamming=4)
+
+
+@st.composite
+def bucket_rows(draw, n_keys: int, string_ids: bool):
+    """A set of (id, key...) rows: most ids share one hot bucket, the
+    rest draw small keys, and one row of each frame has a null key."""
+    if string_ids:
+        ids = st.text(alphabet="abAB09_", max_size=4)
+    else:
+        ids = st.integers(min_value=-(2**62), max_value=2**62)
+    id_list = draw(st.lists(ids, min_size=2, max_size=9, unique=True))
+    if n_keys == 1:
+        keys = st.sampled_from([(0,), (1,), (2,), (None,)])
+    else:  # buckets that share one component must stay apart
+        keys = st.sampled_from([(0, 0), (0, 1), (1, 0), (None, 0), (1, None)])
+    hot = (7,) * n_keys
+    rows = set()
+    for i in id_list:
+        if draw(st.integers(min_value=0, max_value=4)):
+            rows.add((i, *hot))
+        for _ in range(draw(st.integers(min_value=0, max_value=2))):
+            rows.add((i, *draw(keys)))
+    rows.add((id_list[0], *([None] * n_keys)))
+    return sorted(rows, key=repr)
+
+
+@pytest.mark.parametrize("n_keys", [1, 2])
+@pytest.mark.parametrize("string_ids", [False, True], ids=["long_ids", "string_ids"])
+def test_bucket_pairs_equals_bruteforce(spark, n_keys, string_ids):
+    """``bucket_pairs`` returns each id pair (a < b) sharing a bucket,
+    with the number of buckets it shares: equal to a Python brute force
+    over one- and two-key buckets, long and string ids, a bucket that
+    holds most rows, and null keys (which pair with nothing)."""
+    from collections import Counter, defaultdict
+
+    from pydra_map_reduce_spark.operators.dedup import bucket_pairs
+
+    keys = [f"k{j}" for j in range(n_keys)]
+    schema = ", ".join([f"id {'string' if string_ids else 'long'}"] + [f"{k} int" for k in keys])
+
+    @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+    @given(rows=bucket_rows(n_keys, string_ids))
+    def check(rows):
+        buckets = defaultdict(set)
+        for i, *k in rows:
+            if None not in k:
+                buckets[tuple(k)].add(i)
+        want = Counter((a, b) for ids in buckets.values() for a in ids for b in ids if a < b)
+        df = spark.createDataFrame(rows, schema)
+        got = {
+            (r["id_a"], r["id_b"]): r["n"]
+            for r in bucket_pairs(df, "id", keys[0] if n_keys == 1 else keys).collect()
+        }
+        assert got == dict(want)
+
+    check()
 
 
 def test_kcenter_radii_monotone_and_distinct(spark):
